@@ -3,7 +3,7 @@ package graft
 import java.util.concurrent.atomic.AtomicLong
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 
 /** Benchmark main (driver contract): one JSON line on stdout, mirrored
   * to `bench.json` in the working directory (sbt wraps stdout in
@@ -296,16 +296,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SessionTuning.tuned(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-bench"))
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = SessionTuning.benchSession("graft-bench")
     val agg = new StageAgg
     spark.sparkContext.addSparkListener(agg)
     def drain(): Unit =
@@ -437,8 +428,15 @@ object Bench {
 
     // Reference-workload comparison: full word count over the committed
     // corpus (15 MB), file sink — the BASELINE.md apples-to-apples run.
+    // A missing corpus is reported, never silently dropped: without it
+    // the canary composite below is absent too.
     val corpusDir = new java.io.File("/root/reference/raw_text_input")
-    if (corpusDir.isDirectory && only.forall(_.contains("wordcount_corpus_15mb"))) {
+    val wantCorpus = only.forall(_.contains("wordcount_corpus_15mb"))
+    val corpusAbsent = wantCorpus && !corpusDir.isDirectory
+    if (corpusAbsent)
+      System.err.println(s"[bench] wordcount_corpus_15mb absent: no corpus directory $corpusDir")
+    val absentJson = if (corpusAbsent) ""","absent":["wordcount_corpus_15mb"]""" else ""
+    if (wantCorpus && corpusDir.isDirectory) {
       val paths = corpusDir.list().sorted.map(f => s"${corpusDir.getPath}/$f").toSeq
       def corpusRun(): Unit = {
         val bytes = graft.operators.WordCount.formattedBytes(
@@ -565,7 +563,7 @@ object Bench {
       s""","queries_norm_top":$obj"""
     }
     val head =
-      f"""{"metric":"total","value":$total%.4f,"unit":"sec","protocol":"median-of-3-escalate-5","n_queries":${results.size}$canaryHead,"full":"bench.json"$annJson$normTop,"sf":"$sfDir","queries":{"""
+      f"""{"metric":"total","value":$total%.4f,"unit":"sec","protocol":"median-of-3-escalate-5","n_queries":${results.size}$absentJson$canaryHead,"full":"bench.json"$annJson$normTop,"sf":"$sfDir","queries":{"""
     val tail0 = "}}"
     val entries = gateFirst.map { case (k, v) => "\"" + k + "\":" + f"$v%.3f" }
     val kept = scala.collection.mutable.ArrayBuffer[String]()
@@ -583,7 +581,7 @@ object Bench {
     val line = head + kept.mkString(",") + tail0
     println(line)
     val full =
-      f"""{"metric":"total","value":$total%.4f,"unit":"sec","queries":$qs,"queries_min":$qsMin,"cpu_ms":$cpuJson$annJson$normJson,"protocol":"median-of-3-escalate-5; queries_norm = wall / geomean(canary_keys walls), same battery; queries_min = min(wall_runs)","breakdown":$bd,"sf":"$sfDir"}"""
+      f"""{"metric":"total","value":$total%.4f,"unit":"sec","queries":$qs,"queries_min":$qsMin,"cpu_ms":$cpuJson$absentJson$annJson$normJson,"protocol":"median-of-3-escalate-5; queries_norm = wall / geomean(canary_keys walls), same battery; queries_min = min(wall_runs)","breakdown":$bd,"sf":"$sfDir"}"""
     // sbt prefixes stdout with "[info] "; the file copy is the version a
     // driver can always json.load directly.
     java.nio.file.Files.writeString(java.nio.file.Paths.get("bench.json"), full + "\n")

@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
 
 /** Dev profiler (not part of the driver contract): runs ONE query from
   * [[SparkEntry.queries]] twice at sf0.1 under the bench session config
@@ -12,21 +11,13 @@ import org.apache.spark.sql.SparkSession
   *
   *   sbt "runMain graft.Scratch dedup_ngram_jaccard"            # profile
   *   sbt "runMain graft.Scratch dedup_ngram_jaccard --explain"  # + plan
+  *   sbt "runMain graft.Scratch dedup_ngram_jaccard --final"    # + post-AQE plan
+  *
+  * A/B confs go through SPARK_GRAFT_CONF_EXTRA, as for Bench.
   */
 object Scratch {
   def main(args: Array[String]): Unit = {
-    val b0 = SessionTuning.tuned(SparkSession.builder()
-      .master("local[32]")
-      .appName("graft-scratch"))
-    // dev-only extra confs for A/B runs: SCRATCH_EXTRA="k=v;k=v"
-    SessionTuning.applyExtra(b0, "SCRATCH_EXTRA")
-    val spark = (b0)
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = SessionTuning.benchSession("graft-scratch")
     spark.sparkContext.addSparkListener(new SparkListener {
       override def onStageCompleted(e: SparkListenerStageCompleted): Unit = {
         val si = e.stageInfo
@@ -63,12 +54,6 @@ object Scratch {
       println(if (cut >= 0) p.substring(0, cut) else p)
     }
     Thread.sleep(1000)
-    if (sys.env.contains("SCRATCH_CLEAN_BETWEEN")) {
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
-      System.gc()
-      Thread.sleep(500)
-    }
     println("=== run2 (warm — what Bench measures) ===")
     val t1 = System.nanoTime()
     SparkEntry.queries(name)(spark, sfDir).write.format("noop").mode("overwrite").save()

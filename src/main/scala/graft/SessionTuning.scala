@@ -2,13 +2,16 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** Session-level I/O latency configuration shared by every graft main
-  * (Bench, Verify, Smoke, Scratch, BenchStream, tools) — the r21
-  * optimization round's fix for the measured per-shuffle fixed cost.
+/** The session constructor shared by every graft main (Bench, Verify,
+  * Smoke, BenchStream, cli.Main, Scratch and the `graft.tools` dev
+  * tools) and by the test session, together with the session-level I/O
+  * latency configuration it always applies: the r21 optimization
+  * round's fix for the measured per-shuffle fixed cost.
   *
   * Measured on the bench host (32-core local mode, warm JVM, 300-iter
   * loop of a tiny 32-map × 32-reduce shuffle + noop sink,
-  * `graft.tools.ShuffleLoop`):
+  * `graft.tools.ShuffleLoop`; the rows without a knob are reproduced
+  * with SPARK_GRAFT_LOCAL_DIR=default and SPARK_GRAFT_TRANSFERTO=true):
   *
   *   default                                      0.363 s/shuffle
   *   spark.local.dir=tmpfs                        0.173 s/shuffle
@@ -49,50 +52,81 @@ import org.apache.spark.sql.SparkSession
   * OS pathology per stage boundary.
   */
 object SessionTuning {
-  /** Apply the low-latency shuffle I/O configs to a session builder.
-    * Env overrides: SPARK_GRAFT_LOCAL_DIR (shuffle dir; "default"
-    * leaves Spark's), SPARK_GRAFT_TRANSFERTO ("true" restores the NIO
-    * transferTo copy path). */
+  /** The one session constructor: every graft main and the test session
+    * build their session here, so master, shuffle width, UTC, UI off,
+    * WARN logging and [[tuned]] are decided in one place. */
+  def session(app: String, master: String, shufflePartitions: Int): SparkSession =
+    start(builder(app, master, shufflePartitions))
+
+  /** Bench's shape, shared by Bench, Scratch and the timing tools so
+    * their walls are bench walls: SPARK_GRAFT_CPUS cores (default 32),
+    * 32 shuffle partitions, AQE on. */
+  def benchSession(app: String): SparkSession =
+    start(builder(app, s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]", 32)
+      .config("spark.sql.adaptive.enabled", "true"))
+
+  /** The builder behind [[session]], for a caller that must add to it
+    * before `getOrCreate` (the extensions session in GraftSqlSpec). */
+  private[graft] def builder(app: String, master: String, shufflePartitions: Int): SparkSession.Builder =
+    tuned(SparkSession.builder().master(master).appName(app))
+      .config("spark.sql.shuffle.partitions", shufflePartitions.toString)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.ui.enabled", "false")
+
+  private def start(b: SparkSession.Builder): SparkSession = {
+    val s = b.getOrCreate()
+    s.sparkContext.setLogLevel("WARN")
+    s
+  }
+
+  /** Apply the low-latency shuffle I/O configs to a session builder. */
   def tuned(b: SparkSession.Builder): SparkSession.Builder = {
-    val transferTo = sys.env.getOrElse("SPARK_GRAFT_TRANSFERTO", "false")
-    b.config("spark.file.transferTo", transferTo)
-    localDir.foreach(d => b.config("spark.local.dir", d))
-    // AQE sizes stages by BYTES; this engine's text stages are regex-
-    // CPU-dense at tiny byte sizes, and the bench corpus is a single-
-    // row-group file (scans are structurally one task), so the two
-    // byte-blind AQE demotions measurably serialize CPU work (r21,
-    // full-battery A/B on a quiet host, 106 queries):
-    //   - the LOCAL shuffle reader rewrites an explicit doc_id spread
-    //     feeding a broadcast join into map-local reads — 1 map task ⇒
-    //     1 reduce task, 31 cores idle through the redact stack
-    //     (battery 97.1 → 89.8 s with it off);
-    //   - partition coalescing's 1 MB floor packs a CPU-dense 4 MB
-    //     frame into 4 tasks (89.8 → 84.3 s with a 16 KB floor —
-    //     dedup_simhash_pairs 1.59 → 0.97 s, dedup_ngram_jaccard
-    //     1.13 → 0.86 s).
-    // Both knobs only bind when post-shuffle partitions are tiny; at
-    // cluster scale partitions sit at the advisory size and neither
-    // engages. Env-overridable for hosts that want the stock behavior.
-    b.config("spark.sql.adaptive.localShuffleReader.enabled",
-      sys.env.getOrElse("SPARK_GRAFT_LOCAL_SHUFFLE_READER", "false"))
-    b.config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-      sys.env.getOrElse("SPARK_GRAFT_MIN_PARTITION_SIZE", "16k"))
-    // experiment passthrough (dev A/B runs): SPARK_GRAFT_CONF_EXTRA="k=v;k=v"
-    applyExtra(b, "SPARK_GRAFT_CONF_EXTRA")
+    tunedConfs(sys.env).foreach { case (k, v) => b.config(k, v) }
     b
   }
 
-  /** Parse an env var of the form "k=v;k=v" into session configs,
-    * failing with a message that NAMES the variable on a malformed
-    * entry (ADVICE r21: the bare `val Array(k, v) = …` pattern threw an
-    * opaque MatchError). Shared by Bench/Verify (via [[tuned]]) and the
-    * dev probes (SCRATCH_EXTRA / PROBE_EXTRA). */
-  def applyExtra(b: SparkSession.Builder, envVar: String): Unit =
-    sys.env.get(envVar).foreach(_.split(";").filter(_.nonEmpty).foreach { kv =>
+  /** The configs [[tuned]] applies, as a function of the environment.
+    * Env overrides: SPARK_GRAFT_LOCAL_DIR (shuffle dir; "default"
+    * leaves Spark's), SPARK_GRAFT_TRANSFERTO ("true" restores the NIO
+    * transferTo copy path), SPARK_GRAFT_LOCAL_SHUFFLE_READER,
+    * SPARK_GRAFT_MIN_PARTITION_SIZE, and SPARK_GRAFT_CONF_EXTRA="k=v;k=v"
+    * (experiment passthrough for dev A/B runs, applied last). */
+  private[graft] def tunedConfs(env: Map[String, String]): Seq[(String, String)] =
+    Seq("spark.file.transferTo" -> env.getOrElse("SPARK_GRAFT_TRANSFERTO", "false")) ++
+      localDir(env).map("spark.local.dir" -> _) ++
+      // AQE sizes stages by BYTES; this engine's text stages are regex-
+      // CPU-dense at tiny byte sizes, and the bench corpus is a single-
+      // row-group file (scans are structurally one task), so the two
+      // byte-blind AQE demotions measurably serialize CPU work (r21,
+      // full-battery A/B on a quiet host, 106 queries):
+      //   - the LOCAL shuffle reader rewrites an explicit doc_id spread
+      //     feeding a broadcast join into map-local reads — 1 map task ⇒
+      //     1 reduce task, 31 cores idle through the redact stack
+      //     (battery 97.1 → 89.8 s with it off);
+      //   - partition coalescing's 1 MB floor packs a CPU-dense 4 MB
+      //     frame into 4 tasks (89.8 → 84.3 s with a 16 KB floor —
+      //     dedup_simhash_pairs 1.59 → 0.97 s, dedup_ngram_jaccard
+      //     1.13 → 0.86 s).
+      // Both knobs only bind when post-shuffle partitions are tiny; at
+      // cluster scale partitions sit at the advisory size and neither
+      // engages. Env-overridable for hosts that want the stock behavior.
+      Seq(
+        "spark.sql.adaptive.localShuffleReader.enabled" ->
+          env.getOrElse("SPARK_GRAFT_LOCAL_SHUFFLE_READER", "false"),
+        "spark.sql.adaptive.coalescePartitions.minPartitionSize" ->
+          env.getOrElse("SPARK_GRAFT_MIN_PARTITION_SIZE", "16k")) ++
+      env.get("SPARK_GRAFT_CONF_EXTRA").toSeq
+        .flatMap(parseConfs("SPARK_GRAFT_CONF_EXTRA", _))
+
+  /** Parse "k=v;k=v" into config pairs, failing with a message that
+    * NAMES the variable on a malformed entry (ADVICE r21: the bare
+    * `val Array(k, v) = …` pattern threw an opaque MatchError). */
+  private[graft] def parseConfs(envVar: String, spec: String): Seq[(String, String)] =
+    spec.split(";").toSeq.filter(_.nonEmpty).map { kv =>
       val i = kv.indexOf('=')
       require(i > 0, s"$envVar: malformed entry '$kv' (expected key=value)")
-      b.config(kv.substring(0, i), kv.substring(i + 1))
-    })
+      kv.substring(0, i) -> kv.substring(i + 1)
+    }
 
   /** Require this much free tmpfs headroom before defaulting shuffle
     * files onto /dev/shm (ADVICE r21: an unconditional tmpfs default
@@ -105,8 +139,8 @@ object SessionTuning {
     * still overrides in both directions. */
   private final val TmpfsMinFreeBytes: Long = 16L << 30
 
-  private def localDir: Option[String] =
-    sys.env.get("SPARK_GRAFT_LOCAL_DIR") match {
+  private def localDir(env: Map[String, String]): Option[String] =
+    env.get("SPARK_GRAFT_LOCAL_DIR") match {
       case Some("default") => None
       case Some(d) => Some(d)
       case None =>

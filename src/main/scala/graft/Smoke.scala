@@ -1,18 +1,10 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev smoke runner mirroring the driver's t1 gate: `entry()` on sf0.001
   * must return rows. `sbt "runMain graft.Smoke"`. */
 object Smoke {
   def main(args: Array[String]): Unit = {
-    val spark = SessionTuning.tuned(SparkSession.builder()
-      .master("local[8]"))
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = SessionTuning.session("graft-smoke", "local[8]", 8)
     val df = SparkEntry.entry(spark)
     val n = df.count()
     df.show(20, truncate = false)

@@ -11,13 +11,7 @@ object Verify {
     val only: Option[Set[String]] =
       if (args.length > 2) Some(args.drop(2).toSet) else None
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SessionTuning.tuned(SparkSession.builder()
-      .master(s"local[$cpus]"))
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = SessionTuning.session("graft-verify", s"local[$cpus]", cpus.toInt)
     val queries = SparkEntry.queries
       .filter { case (name, _) => only.forall(_.contains(name)) }
     val failed = run(spark, sfDir, outDir, queries, SparkEntry.oracleSql)

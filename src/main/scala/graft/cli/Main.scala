@@ -1,6 +1,5 @@
 package graft.cli
 
-import org.apache.spark.sql.SparkSession
 import graft.operators.WordCount
 
 /** CLI reproducing the reference's contract: `run <files...>` prints the
@@ -15,14 +14,8 @@ object Main {
       case other => (None, other)
     }
     require(paths.nonEmpty, "usage: graft.cli.Main [--out FILE] <files...>")
-    val spark = graft.SessionTuning.tuned(SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[32]"))
-      .appName("graft-wordcount"))
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.SessionTuning.session("graft-wordcount",
+      sys.env.getOrElse("SPARK_MASTER", "local[32]"), 32)
     val t0 = System.nanoTime()
     val bytes = WordCount.formattedBytes(spark, paths, paths.head,
       includeUnique = outFile.isDefined)

@@ -963,45 +963,6 @@ object Curation {
       .orderBy($"doc_id", $"chunk_idx")
   }
 
-  // dev-probe seams (graft.tools.Probe) — sub-step timing only, not part
-  // of any query surface
-  private[graft] def probeDsirSelect(target: DataFrame, raw: DataFrame): DataFrame =
-    dsirSelectFrom(dsirWeightsOn(target, raw))
-  /** Sub-step timing of the r14 staged dsir pipeline (dev probe). */
-  private[graft] def probeDsirStaged(docs: DataFrame): Unit = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    def t[A](name: String)(f: => A): A = {
-      val t0 = System.nanoTime()
-      val r = f
-      println(f"[probe]   dsir14 $name%-20s ${(System.nanoTime() - t0) / 1e9}%8.3f s")
-      r
-    }
-    val width = spark.sparkContext.defaultParallelism
-    val raw = docs.repartition(width, $"doc_id").select($"doc_id", $"text")
-    val target = docs
-      .filter(pmod($"doc_id", lit(Dedup.SnapshotMod)) < Dedup.SnapshotNewMin &&
-        $"lang" === "en")
-      .repartition(width, $"doc_id")
-      .select($"text")
-    val fresh = raw
-      .filter(pmod($"doc_id", lit(Dedup.SnapshotMod)) >= Dedup.SnapshotNewMin)
-    val (drop, wAll) = t("artifacts-all") { concurrently(
-      t("pair")(Materialize.frame(Dedup.dedupNgramJaccardOnDocs(raw)
-        .select($"doc_b".as("doc_id")).distinct())),
-      t("weightsAll")(Materialize.frame(
-        dsirWeightsFromCt(t("ct")(dsirTargetCounts(target)), fresh)))) }
-    val wKept = wAll.join(drop, Seq("doc_id"), "left_anti")
-    val selected = t("select")(dsirSelectFrom(wKept).select($"doc_id"))
-    t("tail")(samplesOfGood(docs.join(selected, Seq("doc_id"), "left_semi")
-      .repartition(width, $"doc_id")
-      .select($"doc_id", TextAnalysis.redactedCol($"text").as("text")))
-      .write.format("noop").mode("overwrite").save())
-  }
-
-  private[graft] def probeSamplesOfGood(good: DataFrame): DataFrame =
-    samplesOfGood(good)
-
   /** The keep-branch redact staged ABOVE a doc_id exchange (r21): the
     * drop-list anti-join runs on the RAW frame (its key is doc_id only,
     * so the optimizer would push it below any repartition+projection

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 
 /** Dev sweep: recall@TopK of the ANN family vs the exact brute-force
   * answer, across the refine knobs (nprobe × rerank pool). Writes the
@@ -14,13 +14,7 @@ object AnnRecall {
   }
 
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .appName("graft-ann-recall")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.SessionTuning.benchSession("graft-ann-recall")
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val brute = graft.operators.Similarity.simTopKBrute(spark, sfDir)
     for (np <- Seq(16); pool <- Seq(400, 600, 800)) {

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 
 import graft.operators.TextAnalysis
 import graft.sources.Tables
@@ -30,15 +29,7 @@ object BpeScaleProbe {
     val maxMerges = args.lift(3).map(_.toInt).getOrElse(Int.MaxValue)
     val curveEvery = args.lift(4).map(_.toInt).getOrElse(40)
     val byteMode = args.lift(5).contains("bytes")
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .appName("graft-bpe-scale-probe")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.SessionTuning.benchSession("graft-bpe-scale-probe")
     val counter = new java.util.concurrent.atomic.AtomicInteger
     spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
       override def onJobStart(

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 
 /** Dev generator: an embeddings table with PLANTED GAUSSIAN CLUSTERS —
   * the corpus shape real embedding models produce, vs the isotropic
@@ -24,13 +23,7 @@ object ClusterGen {
     val k = if (args.length > 2) args(2).toInt else 32
     val sigma = if (args.length > 3) args(3).toDouble else 0.1
     val dims = graft.functions.LshImpl.Dims
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .appName("graft-cluster-gen")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.SessionTuning.session("graft-cluster-gen", "local[8]", 8)
     import spark.implicits._
     val rnd = new java.util.Random(0xc1057e2L)
     def unit(v: Array[Double]): Array[Double] = {

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Dev probe (not part of the driver contract): the fixed per-job /
@@ -13,17 +12,7 @@ import org.apache.spark.sql.functions._
 object LatencyProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val b = SparkSession.builder()
-      .master("local[32]")
-      .appName("graft-latency-probe")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-    sys.env.get("PROBE_LOCAL_DIR").foreach(d => b.config("spark.local.dir", d))
-    graft.SessionTuning.applyExtra(b, "PROBE_EXTRA")
-    val spark = b.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.SessionTuning.benchSession("graft-latency-probe")
     import spark.implicits._
     def time(f: => Unit): Double = {
       val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9

@@ -2,7 +2,6 @@ package graft.tools
 
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.SparkSession
 
 /** Dev tool (not part of the driver contract): regenerates PLANS.md —
   * the FINAL (post-AQE, post-execution) physical plans of the
@@ -152,14 +151,7 @@ object PlanDump {
   )
 
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .appName("graft-plan-dump")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.SessionTuning.session("graft-plan-dump", "local[8]", 8)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
     val sb = new StringBuilder
     sb.append("# PLANS — final physical plans of the representative queries\n\n")

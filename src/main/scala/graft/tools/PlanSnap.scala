@@ -2,7 +2,6 @@ package graft.tools
 
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.SparkSession
 
 /** Dev tool: write `df.explain("formatted")` for a list of queries to
   * files — the before/after plan evidence for an optimization round.
@@ -20,19 +19,7 @@ object PlanSnap {
     Files.createDirectories(outDir)
     val suffix = args(1)
     val names = args.drop(2).toSeq
-    // plain builder (no SessionTuning): the tuning knobs govern shuffle
-    // I/O and AQE runtime sizing, not the formatted plan — and this
-    // file is copied verbatim into the round-start worktree for the
-    // _before dumps, which predates SessionTuning
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .appName("graft-plan-snap")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.SessionTuning.session("graft-plan-snap", "local[32]", 32)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     for (name <- names) {
       try {

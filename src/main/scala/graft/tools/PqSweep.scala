@@ -1,17 +1,11 @@
 package graft.tools
-import org.apache.spark.sql.SparkSession
 
 /** Dev probe: un-reranked IVF-PQ recall across the (codewords k ×
   * subspaces m) grid — the measurement behind the shipped compressed
   * tiers' geometry choices. */
 object PqSweep {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[32]")
-      .appName("pq-sweep").config("spark.sql.shuffle.partitions","32")
-      .config("spark.sql.adaptive.enabled","true")
-      .config("spark.sql.session.timeZone","UTC")
-      .config("spark.ui.enabled","false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.SessionTuning.benchSession("graft-pq-sweep")
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val brute = graft.operators.Similarity.simTopKBrute(spark, sfDir)
       .collect().map(r => (r.getLong(0), r.getLong(2))).toSet

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Builds the R× scaling corpus behind SCALING.md's MEASURED table — a
@@ -68,14 +67,7 @@ object ScaleGen {
     // table pipelines don't read the relational tables, and ×100
     // lineitem would dominate the generation wall for nothing
     val docsMode = args.lift(3).contains("docsmode")
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .appName("graft-scale-gen")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.SessionTuning.benchSession("graft-scale-gen")
     // The stride GROWS with the source's id range (r20: a fixed stride
     // failed chained runs — ScaleGen output fed back in as a source for
     // ×10 → ×100 — because the grown ids already exceeded it): replica

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 
 /** Dev audit (not part of the driver contract): executes every batch
@@ -17,14 +16,7 @@ import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
   */
 object ScanAudit {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .appName("graft-scan-audit")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.SessionTuning.session("graft-scan-audit", "local[8]", 8)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
     val filter = args.headOption.getOrElse("")
     val skip = Set( // streaming queries drive their own sinks

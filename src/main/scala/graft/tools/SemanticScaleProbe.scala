@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Dev measurement (not part of the driver contract): demonstrates
@@ -20,14 +19,7 @@ object SemanticScaleProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/tmp/graft_sf1")
     val ks = args.lift(1).getOrElse("16,160").split(",").map(_.trim.toInt).toSeq
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .appName("graft-semantic-scale-probe")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.SessionTuning.benchSession("graft-semantic-scale-probe")
     import spark.implicits._
     val e = graft.sources.Tables.embeddings(spark, sfDir)
       .select(col("vec_id"), col("label"),

@@ -1,20 +1,11 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 
 /** Dev probe: tight loop of tiny 32x32 shuffles so a profiler/jstack can
   * catch where the ~0.25 s per-shuffle constant goes. */
 object ShuffleLoop {
   def main(args: Array[String]): Unit = {
-    val b = SparkSession.builder()
-      .master("local[32]")
-      .appName("graft-shuffle-loop")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-    graft.SessionTuning.applyExtra(b, "PROBE_EXTRA")
-    val spark = b.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.SessionTuning.benchSession("graft-shuffle-loop")
     val n = args.headOption.map(_.toInt).getOrElse(300)
     val t0 = System.nanoTime()
     (1 to n).foreach { _ =>

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 
 /** Dev tuner for the gate metric (not part of the driver contract):
   * sweeps the two knobs that govern the corpus word-count's task shape
@@ -15,15 +14,7 @@ import org.apache.spark.sql.SparkSession
   */
 object WcTune {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .appName("graft-wctune")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.SessionTuning.benchSession("graft-wctune")
     val corpusDir = new java.io.File("/root/reference/raw_text_input")
     val paths = corpusDir.list().sorted.map(f => s"${corpusDir.getPath}/$f").toSeq
 

@@ -30,10 +30,8 @@ class GraftSqlSpec extends AnyFunSuite {
     // withExtensions: the conf-string path (spark.sql.extensions) only
     // applies when the SparkContext itself is created, which the shared
     // test context precludes — the class is the same either way
-    val s2 = SparkSession.builder()
-      .master("local[2]")
+    val s2 = SessionTuning.builder("graft-test-ext", "local[2]", 2)
       .withExtensions(new GraftExtensions)
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     try {
       val r = s2.sql("SELECT normalize_word('--DASH--') AS w").collect()(0)

@@ -5,17 +5,7 @@ import org.apache.spark.sql.SparkSession
 /** One shared local session for the whole test run (suites share the JVM
   * under `Test / fork := true`). */
 object SparkTestSession {
-  lazy val spark: SparkSession = {
-    val s = SessionTuning.tuned(SparkSession.builder()
-      .master("local[8]")
-      .appName("graft-test"))
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  lazy val spark: SparkSession = SessionTuning.session("graft-test", "local[8]", 8)
 
   val sf0001 = "/root/testdata/sf0.001"
   val sf001 = "/root/testdata/sf0.01"
