@@ -14,9 +14,11 @@ package graft.tools
   */
 object WcTune {
   def main(args: Array[String]): Unit = {
-    val spark = graft.SessionTuning.benchSession("graft-wctune")
     val corpusDir = new java.io.File("/root/reference/raw_text_input")
-    val paths = corpusDir.list().sorted.map(f => s"${corpusDir.getPath}/$f").toSeq
+    val names = corpusDir.list()
+    if (names == null) sys.error(s"corpus directory $corpusDir is missing or unreadable")
+    val paths = names.sorted.map(f => s"${corpusDir.getPath}/$f").toSeq
+    val spark = graft.SessionTuning.benchSession("graft-wctune")
 
     def run(): Unit = {
       val bytes = graft.operators.WordCount.formattedBytesInner(
