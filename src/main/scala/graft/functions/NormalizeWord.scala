@@ -23,6 +23,11 @@ import org.apache.spark.unsafe.types.UTF8String
   * (`don't`, `re-use`, `karamazov</title`).
   */
 object WordNorm {
+  /** C-locale `isspace(b)`: the `istream >>` token separators 0x20 and
+    * 0x09-0x0D (the same set as Java regex `\s`). */
+  @inline def isSpace(b: Byte): Boolean =
+    b == 0x20 || (b >= 0x09 && b <= 0x0d)
+
   /** C-locale `ispunct(b) || b < 0` on a signed byte. Punct ranges:
     * 0x21-0x2F, 0x3A-0x40, 0x5B-0x60, 0x7B-0x7E. */
   @inline def isStrip(b: Byte): Boolean =

@@ -13,14 +13,13 @@ import org.apache.spark.sql.types.{ArrayType, DataType, StringType, StructField,
 import org.apache.spark.unsafe.types.UTF8String
 
 /** One byte-level pass over a text line: split on C-locale whitespace
-  * (the `istream >>` set: 0x20, 0x09–0x0D — identical to Java regex
-  * `\s`), apply the reference's normalize (WordNorm, byte-exact
-  * `process_word`), drop empties. Tokens are zero-copy slices of the
+  * ([[WordNorm.isSpace]]), apply the reference's normalize (WordNorm,
+  * byte-exact `process_word`), drop empties. [[WordCombiner]] tokenizes
+  * with the same two predicates. Tokens are zero-copy slices of the
   * line's bytes when no rewrite is needed (the common case).
   */
 object TokenizeNormalizeImpl {
-  @inline private def isSpace(b: Byte): Boolean =
-    b == 0x20 || (b >= 0x09 && b <= 0x0d)
+  import WordNorm.{isSpace, isStrip}
 
   /** Called from both interpreted eval and generated code. One ArrayData
     * per LINE (not per token) is the only fixed allocation. */
@@ -35,9 +34,9 @@ object TokenizeNormalizeImpl {
       while (e < n && !isSpace(bytes(e))) e += 1
       var s = i
       i = e // consume the token span
-      while (s < e && WordNorm.isStrip(bytes(s))) s += 1
+      while (s < e && isStrip(bytes(s))) s += 1
       var t = e
-      while (t > s && WordNorm.isStrip(bytes(t - 1))) t -= 1
+      while (t > s && isStrip(bytes(t - 1))) t -= 1
       if (t > s) {
         var hasUpper = false
         var j = s

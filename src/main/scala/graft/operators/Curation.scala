@@ -2044,22 +2044,12 @@ object Curation {
 
   /** The DSIR transform over any (target, raw) pair of (doc_id, text)
     * frames (spec entry point: hand-checkable vocabularies). */
-  private[graft] def dsirWeightsOn(target: DataFrame, raw: DataFrame): DataFrame =
-    dsirWeightsFromCt(dsirTargetCounts(target), raw)
-
-  /** The ≤4096-row target-side bucket-count artifact, materialized —
-    * split out so callers can overlap this fit with other jobs (the
-    * DSIR-gated pipeline runs it concurrently with the pair search). */
-  private[graft] def dsirTargetCounts(target: DataFrame): DataFrame = {
+  private[graft] def dsirWeightsOn(target: DataFrame, raw: DataFrame): DataFrame = {
     val spark = target.sparkSession
     import spark.implicits._
-    Materialize.frame(TextAnalysis.qmFeatures(target.select($"text"))
+    // the ≤4096-row target-side bucket-count artifact, materialized
+    val ct = Materialize.frame(TextAnalysis.qmFeatures(target.select($"text"))
       .groupBy($"b").agg(count(lit(1)).as("c")))
-  }
-
-  private[graft] def dsirWeightsFromCt(ct: DataFrame, raw: DataFrame): DataFrame = {
-    val spark = ct.sparkSession
-    import spark.implicits._
     // per-(doc, bucket) raw counts: the ONE raw expansion, feeding both
     // the background model and the scoring join (algebraically equal to
     // per-occurrence scoring: Σ_occ (qp−qq) = Σ_b k_b·(qp_b−qq_b))
@@ -2076,7 +2066,7 @@ object Curation {
     import spark.implicits._
     // rdf must be CHEAP TO RESCAN (checkpointed, or a filter over a
     // checkpoint) — it is consumed by the background agg below and the
-    // scoring join; FromCt materializes the raw expansion before
+    // scoring join; dsirWeightsOn materializes the raw expansion before
     // delegating, the dsir pipeline passes a checkpointed-frame filter.
     //
     // BOTH ≤QmBuckets-row model tables come back in ONE side-tagged

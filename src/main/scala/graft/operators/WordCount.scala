@@ -1,19 +1,23 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Encoders, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
-import graft.functions.NormalizeWord
+import graft.functions.{NormalizeWord, WordCombiner, WordCounts}
 import graft.sources.Tables
 
 /** The reference's one true query — tokenize / normalize / count / rank —
   * as a composable Spark pipeline (SURVEY.md §2.1 operators O1–O15).
   *
-  * Layout of the physical plan Catalyst produces for `counts`:
-  * FileScan text → WholeStageCodegen(Generate(split) + normalize_word +
-  * Filter) → HashAggregate(partial) → Exchange(hash word) →
-  * HashAggregate(final). Map-side partial aggregation (the reference's
-  * hand-built combiner, `omp.cpp:92-141`) falls out automatically.
+  * Layout of the physical plan Catalyst produces for `counts`, the
+  * DataFrame path the `wc_*` queries compose and tests use as the
+  * differential reference: FileScan text → WholeStageCodegen(Generate
+  * (tokenize_normalize)) → HashAggregate(partial) → Exchange(hash word)
+  * → HashAggregate(final).
+  *
+  * The CLI path, [[formattedBytes]], skips that layout: one stage of
+  * scan tasks, each with an in-mapper combiner (the reference's
+  * hand-built one, `omp.cpp:92-141`), whose partials the driver merges.
   */
 object WordCount {
 
@@ -31,8 +35,11 @@ object WordCount {
   def tokenize(df: DataFrame, textCol: String): DataFrame =
     df.select(graft.functions.TokenizeNormalize(col(textCol)))
 
-  /** Reference composition of built-ins; semantically identical to
-    * `tokenize` (asserted in WordCountGoldenSpec). */
+  /** Reference composition of built-ins; identical to `tokenize` on valid
+    * UTF-8 (asserted in WordCountGoldenSpec and WordCombinerSpec). On
+    * invalid UTF-8 inside a token it differs: Spark's regex `split`
+    * decodes the line, so each invalid sequence comes out as U+FFFD
+    * (EF BF BD). Edge bytes are unaffected, as both forms strip them. */
   def tokenizeUnfused(df: DataFrame, textCol: String): DataFrame =
     df.select(explode(split(col(textCol), "\\s+")).as("raw"))
       .select(NormalizeWord(col("raw")).as("word"))
@@ -63,30 +70,33 @@ object WordCount {
       count(lit(1)).as("unique_words"))
 
   /** Reference CLI contract (`omp.cpp:219-223`, `hybrid.cpp:444-453`):
-    * header + `[i] word: count` lines, ascending byte order. Collects the
-    * final result to the driver — the one deliberate parity cost
-    * (SURVEY.md §7.5); cardinality = vocabulary size, not corpus size.
-    * Words are materialized as raw bytes (cast to binary) so invalid-UTF-8
-    * vocabularies round-trip exactly. */
+    * header + `[i] word: count` lines, ascending byte order.
+    *
+    * One Spark job with no shuffle, the reference's own MapReduce shape:
+    *  - read+map: every scan task folds its lines, as raw bytes (so
+    *    invalid-UTF-8 words round-trip exactly), into a
+    *    [[graft.functions.WordCombiner]] and returns it packed;
+    *  - reduce: the driver merges the partials into one combiner;
+    *  - sort+print: the driver sorts that vocabulary by unsigned bytes
+    *    and writes the lines into one byte buffer.
+    * Driver bound: it receives Σ per-partition vocabulary, at most scan
+    * tasks × vocabulary words; the output itself already needs the
+    * whole vocabulary on the driver (SURVEY.md §7.5's parity cost). The
+    * op is a typed Dataset action, not an RDD one, so it raises
+    * SQL-execution events (plan and confs capturable) like every other
+    * query. */
   def formattedBytes(spark: SparkSession, paths: Seq[String],
       headerLabel: String, includeUnique: Boolean): Array[Byte] = {
-    // Small-corpus task-shape tuning, scoped to this run (conf restored
-    // in the finally). Two knobs, both re-chosen by a measured sweep
-    // (graft.tools.WcTune, 2026-08-14; r12):
-    //  - scan splits: the default openCostInBytes (4 MB) inflates each
-    //    small file to 4 MB for bin-packing, so a 29-file / 15 MB corpus
-    //    packs into ~2 splits and tokenizes on 2 of 32 cores; the r11
-    //    256 KB floor over-corrected to ~60 splits whose per-task
-    //    overhead dominated a 15 MB input. The sweep's optimum is ~1 MB
-    //    splits (≈15 tasks — FEWER than cores, because a task costs more
-    //    than tokenizing 1 MB); clamp keeps genuinely large inputs at
-    //    the default 128 MB packing.
-    //  - reduce partitions: the shuffle carries the VOCABULARY (57k
-    //    rows / 5.6 MB here), not the corpus — 32 reduce tasks over
-    //    5.6 MB is pure scheduling overhead (measured 0.59 s → 0.25 s
-    //    going 32 → 4). Size ≈ one task per 4 MB of input as a proxy,
-    //    floored at 4 and capped at the session default so a large
-    //    corpus keeps full reduce parallelism.
+    // Small-corpus scan-split tuning, scoped to this run (conf restored
+    // in the finally), re-chosen by a measured sweep (graft.tools.WcTune,
+    // 2026-08-14; r12): the default openCostInBytes (4 MB) inflates each
+    // small file to 4 MB for bin-packing, so a 29-file / 15 MB corpus
+    // packs into ~2 splits and tokenizes on 2 of 32 cores; the r11
+    // 256 KB floor over-corrected to ~60 splits whose per-task overhead
+    // dominated a 15 MB input. The sweep's optimum is ~1 MB splits
+    // (≈15 tasks — FEWER than cores, because a task costs more than
+    // tokenizing 1 MB); clamp keeps genuinely large inputs at the
+    // default 128 MB packing.
     val totalBytes = paths.map(p => new java.io.File(p).length()).sum
     val cores = spark.sparkContext.defaultParallelism.toLong
     val target = math.min(
@@ -95,55 +105,91 @@ object WordCount {
     val conf = spark.conf
     val oldMax = conf.getOption("spark.sql.files.maxPartitionBytes")
     val oldCost = conf.getOption("spark.sql.files.openCostInBytes")
-    val oldShuffle = conf.getOption("spark.sql.shuffle.partitions")
-    val reduceParts = math.min(
-      math.max(totalBytes / (4L * 1024 * 1024), 4L),
-      oldShuffle.flatMap(_.toLongOption).getOrElse(cores))
     conf.set("spark.sql.files.maxPartitionBytes", target.toString)
     conf.set("spark.sql.files.openCostInBytes", (64L * 1024).toString)
-    conf.set("spark.sql.shuffle.partitions", reduceParts.toString)
     try formattedBytesInner(spark, paths, headerLabel, includeUnique)
     finally {
       oldMax.fold(conf.unset("spark.sql.files.maxPartitionBytes"))(
         conf.set("spark.sql.files.maxPartitionBytes", _))
       oldCost.fold(conf.unset("spark.sql.files.openCostInBytes"))(
         conf.set("spark.sql.files.openCostInBytes", _))
-      oldShuffle.fold(conf.unset("spark.sql.shuffle.partitions"))(
-        conf.set("spark.sql.shuffle.partitions", _))
     }
   }
 
-  /** The pipeline under whatever split/shuffle conf is already set —
-    * the seam graft.tools.WcTune sweeps without the wrapper's own
-    * split tuning fighting the experiment. */
+  /** The pipeline under whatever split conf is already set — the seam
+    * graft.tools.WcTune sweeps without the wrapper's own split tuning
+    * fighting the experiment. */
   private[graft] def formattedBytesInner(spark: SparkSession, paths: Seq[String],
       headerLabel: String, includeUnique: Boolean): Array[Byte] = {
-    val words = tokenize(linesFromFiles(spark, paths), "value")
-    val cnts = counts(words)
-    // collect unsorted and sort on the driver: the result is vocabulary-
-    // sized, and skipping orderBy avoids range-partitioning's extra
-    // sampling job + shuffle. Unsigned byte compare ≡ UTF8String binary
-    // order ≡ C++ std::string <.
-    val rows = cnts.select(col("word").cast("binary"), col("cnt")).collect()
-    java.util.Arrays.sort(rows, { (a: Row, b: Row) =>
-      java.util.Arrays.compareUnsigned(
-        a.getAs[Array[Byte]](0), b.getAs[Array[Byte]](0))
-    })
-    var total = 0L
-    rows.foreach(r => total += r.getLong(1))
-    val out = new java.io.ByteArrayOutputStream(rows.length * 16 + 64)
-    val ascii = java.nio.charset.StandardCharsets.US_ASCII
-    out.write(s"Filename: $headerLabel, total words: $total\n".getBytes(ascii))
-    if (includeUnique)
-      out.write(s"Unique words found: ${rows.length}\n".getBytes(ascii))
+    val partials = linesFromFiles(spark, paths)
+      .select(col("value").cast("binary")).as(Encoders.BINARY)
+      .mapPartitions { (lines: Iterator[Array[Byte]]) =>
+        val c = new WordCombiner
+        lines.foreach(c.addLine)
+        Iterator.single(c.packed)
+      }(Encoders.product[WordCounts])
+      .collect()
+    val all = new WordCombiner
+    partials.foreach(all.merge)
+    val header = (s"Filename: $headerLabel, total words: ${all.total}\n" +
+      (if (includeUnique) s"Unique words found: ${all.size}\n" else ""))
+      .getBytes(java.nio.charset.StandardCharsets.US_ASCII)
+    formatLines(header, all.sorted)
+  }
+
+  /** `header` then `[i] word: count\n` per word, in `wc`'s order, into
+    * one exactly sized buffer. */
+  private def formatLines(header: Array[Byte], wc: WordCounts): Array[Byte] = {
+    val n = wc.lens.length
+    var size = header.length.toLong + wc.words.length
     var i = 0
-    while (i < rows.length) {
-      out.write(s"[$i] ".getBytes(ascii))
-      out.write(rows(i).getAs[Array[Byte]](0))
-      out.write(s": ${rows(i).getLong(1)}\n".getBytes(ascii))
+    while (i < n) {
+      size += 6 + digits(i) + digits(wc.counts(i)) // "[", "] ", ": ", "\n"
       i += 1
     }
-    out.toByteArray
+    val out = new Array[Byte](Math.toIntExact(size))
+    System.arraycopy(header, 0, out, 0, header.length)
+    var pos = header.length
+    var off = 0
+    i = 0
+    while (i < n) {
+      out(pos) = '['
+      pos = writeDigits(out, pos + 1, i)
+      out(pos) = ']'
+      out(pos + 1) = ' '
+      pos += 2
+      System.arraycopy(wc.words, off, out, pos, wc.lens(i))
+      pos += wc.lens(i)
+      off += wc.lens(i)
+      out(pos) = ':'
+      out(pos + 1) = ' '
+      pos = writeDigits(out, pos + 2, wc.counts(i))
+      out(pos) = '\n'
+      pos += 1
+      i += 1
+    }
+    out
+  }
+
+  /** Decimal digits of `v` ≥ 0. */
+  private def digits(v: Long): Int = {
+    var d = 1
+    var x = v
+    while (x >= 10) { x /= 10; d += 1 }
+    d
+  }
+
+  /** Writes `v` ≥ 0 in decimal at `pos`; returns the position after it. */
+  private def writeDigits(out: Array[Byte], pos: Int, v: Long): Int = {
+    val end = pos + digits(v)
+    var x = v
+    var p = end
+    while (p > pos) {
+      p -= 1
+      out(p) = ('0' + (x % 10)).toByte
+      x /= 10
+    }
+    end
   }
 
   // ---- driver-contract queries over the documents table ----------------

@@ -2,13 +2,13 @@ package graft.tools
 
 
 /** Dev tuner for the gate metric (not part of the driver contract):
-  * sweeps the two knobs that govern the corpus word-count's task shape
-  * — scan-split target bytes and reduce-side partition count — and
-  * prints the median-of-3 wall for each combo, same measurement as
-  * Bench's corpus run (full formattedBytes, file sink). The corpus is
-  * 15 MB / ~57k vocabulary, so the optimum is dominated by fixed
-  * per-task overhead, not data volume; this sweep is how the committed
-  * defaults in WordCount.formattedBytes were (re)chosen.
+  * sweeps the knob that governs the corpus word-count's task shape —
+  * the scan-split target bytes — and prints the median-of-3 wall for
+  * each value, same measurement as Bench's corpus run (full
+  * formattedBytes, file sink). The corpus is 15 MB / ~57k vocabulary, so
+  * the optimum is dominated by fixed per-task overhead, not data volume;
+  * this sweep is how the committed default in WordCount.formattedBytes
+  * was (re)chosen.
   *
   *   sbt "runMain graft.tools.WcTune"
   */
@@ -37,12 +37,10 @@ object WcTune {
     spark.conf.set("spark.sql.files.openCostInBytes", (64L * 1024).toString)
     spark.conf.set("spark.sql.files.maxPartitionBytes", (256L * 1024).toString)
     run(); run() // warm
-    for (splitKb <- Seq(128, 256, 512, 1024, 2048);
-         shuffleParts <- Seq(4, 8, 16, 32)) {
+    for (splitKb <- Seq(128, 256, 512, 1024, 2048)) {
       spark.conf.set("spark.sql.files.maxPartitionBytes", (splitKb * 1024L).toString)
-      spark.conf.set("spark.sql.shuffle.partitions", shuffleParts.toString)
       val t = median3()
-      println(f"[wctune] splitKb=$splitKb%5d shuffleParts=$shuffleParts%2d -> $t%.3f s")
+      println(f"[wctune] splitKb=$splitKb%5d -> $t%.3f s")
     }
     spark.stop()
   }

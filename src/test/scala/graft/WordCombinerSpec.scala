@@ -1,0 +1,186 @@
+package graft
+
+import java.nio.charset.StandardCharsets.UTF_8
+import java.nio.file.Files
+
+import org.apache.spark.sql.{DataFrame, Encoders}
+import org.apache.spark.sql.functions.col
+import org.scalacheck.{Gen, Prop, Test => SCTest}
+import org.scalacheck.rng.Seed
+import org.scalatest.funsuite.AnyFunSuite
+
+import graft.functions.{WordCombiner, WordCounts}
+import graft.operators.WordCount
+
+/** Differential checks of the CLI path's in-mapper combiner
+  * ([[WordCombiner]]) against the DataFrame word count it replaces on
+  * that path: `counts(tokenize(…))` (the fused generator) and
+  * `counts(tokenizeUnfused(…))` (built-ins), over generated byte lines
+  * with every whitespace byte, strippable edges, ASCII upper case,
+  * invalid UTF-8, empty lines, tokens longer than 64 KB and enough
+  * distinct words to grow the combiner's table and arena many times. */
+class WordCombinerSpec extends AnyFunSuite {
+  private val spark = SparkTestSession.spark
+
+  private val spaces = Seq(0x20, 0x09, 0x0a, 0x0b, 0x0c, 0x0d).map(_.toByte)
+  private val punct = "!\"#$%&'()*+,-./:;<=>?@[\\]^_`{|}~".getBytes(UTF_8).toSeq
+
+  /** Bytes `WordNorm.isStrip` trims: ASCII punctuation and every byte
+    * ≥ 0x80. */
+  private val stripByte: Gen[Byte] =
+    Gen.frequency(3 -> Gen.oneOf(punct), 1 -> Gen.choose(-128, -1).map(_.toByte))
+
+  private val pool = Seq("the", "The", "THE", "don't", "re-use", "1.e.1", "a", "A",
+    "café", "ça", "Straße", "karamazov</title>").map(_.getBytes(UTF_8))
+
+  /** A token core: a pooled word, a short mixed-case word over a small
+    * alphabet (many repeats that differ only in case), or arbitrary
+    * non-whitespace bytes (mostly invalid UTF-8). */
+  private val core: Gen[Array[Byte]] = Gen.frequency(
+    4 -> Gen.oneOf(pool),
+    4 -> Gen.choose(1, 4).flatMap(Gen.listOfN(_, Gen.oneOf("aAbBcC".getBytes(UTF_8).toSeq)))
+      .map(_.toArray),
+    2 -> Gen.choose(1, 6).flatMap(Gen.listOfN(_, Gen.choose(-128, 127).map(_.toByte)
+      .map(b => if (spaces.contains(b)) 'x'.toByte else b))).map(_.toArray))
+
+  private val token: Gen[Array[Byte]] = for {
+    pre <- Gen.choose(0, 2).flatMap(Gen.listOfN(_, stripByte))
+    c <- Gen.frequency(9 -> core, 1 -> Gen.const(Array.emptyByteArray))
+    post <- Gen.choose(0, 2).flatMap(Gen.listOfN(_, stripByte))
+  } yield pre.toArray ++ c ++ post
+
+  private val separator: Gen[Array[Byte]] =
+    Gen.choose(1, 3).flatMap(Gen.listOfN(_, Gen.oneOf(spaces))).map(_.toArray)
+
+  /** A line, possibly empty, possibly without whitespace after its last
+    * token or before its first. */
+  private val line: Gen[Array[Byte]] = for {
+    toks <- Gen.choose(0, 12).flatMap(Gen.listOfN(_, token))
+    seps <- Gen.listOfN(toks.size + 1, separator)
+    lead <- Gen.oneOf(true, false)
+    trail <- Gen.oneOf(true, false)
+  } yield {
+    val body = toks.zip(seps.tail).flatMap { case (t, s) => t ++ s }.toArray
+    val inner = if (toks.isEmpty) body else body.dropRight(seps.last.length)
+    (if (lead) seps.head else Array.emptyByteArray) ++ inner ++
+      (if (trail && toks.nonEmpty) seps.last else Array.emptyByteArray)
+  }
+
+  private val lines: Gen[Seq[Array[Byte]]] = Gen.choose(0, 200).flatMap(Gen.listOfN(_, line))
+
+  /** Lines no random draw is likely to produce: > 64 KB tokens (in two
+    * cases, one of them the last token of its line) and 20,000 distinct
+    * words, which grow the slot table from 512 to 65,536 entries and the
+    * arena from 4 KB to past 128 KB. */
+  private val fixedLines: Seq[Array[Byte]] = {
+    val long = Array.tabulate[Byte](70000)(i => ('a' + i % 26).toByte)
+    val longUpper = long.map(b => (b - 32).toByte)
+    val many = (0 until 20000).grouped(50).map(_.map(i => s"W$i,").mkString("\t")
+      .getBytes(UTF_8)).toSeq
+    Seq(Array[Byte]('"') ++ long ++ " x ".getBytes(UTF_8), "x ".getBytes(UTF_8) ++ longUpper,
+      Array.emptyByteArray) ++ many ++ many.take(3)
+  }
+
+  private def combine(ls: Iterable[Array[Byte]]): WordCombiner = {
+    val c = new WordCombiner
+    ls.foreach(c.addLine)
+    c
+  }
+
+  /** A packed result as a map, checked free of duplicate words. */
+  private def asMap(p: WordCounts): Map[Seq[Byte], Long] = {
+    val offs = p.lens.scanLeft(0)(_ + _)
+    val m = p.lens.indices.map(i => p.words.slice(offs(i), offs(i + 1)).toSeq -> p.counts(i)).toMap
+    assert(m.size === p.lens.length, "a word occurs twice in a packed result")
+    m
+  }
+
+  private def collectCounts(df: DataFrame): Map[Seq[Byte], Long] =
+    df.select(col("word").cast("binary"), col("cnt")).collect()
+      .map(r => r.getAs[Array[Byte]](0).toSeq -> r.getLong(1)).toMap
+
+  private def linesDf(ls: Seq[Array[Byte]]): DataFrame =
+    spark.createDataset(ls)(Encoders.BINARY).select(col("value").cast("string").as("value"))
+
+  private def check(prop: Prop, n: Int): Unit = {
+    val res = SCTest.check(SCTest.Parameters.default.withMinSuccessfulTests(n), prop)
+    assert(res.passed, res.status.toString)
+  }
+
+  test("combiner ≡ counts(tokenize) ≡ counts(tokenizeUnfused) on generated byte lines") {
+    // Spark's regex split decodes its input as UTF-8, so tokenizeUnfused
+    // sees each invalid sequence as U+FFFD: it agrees with the byte-exact
+    // paths on the lines' UTF-8 round trip, not on their raw bytes.
+    def roundTrip(l: Array[Byte]) = new String(l, UTF_8).getBytes(UTF_8)
+    def agree(ls: Seq[Array[Byte]]): Boolean = {
+      val c = combine(ls)
+      val got = asMap(c.packed)
+      val df = linesDf(ls)
+      val fused = collectCounts(WordCount.counts(WordCount.tokenize(df, "value")))
+      val unfused = collectCounts(WordCount.counts(WordCount.tokenizeUnfused(df, "value")))
+      got == fused && c.total == got.values.sum &&
+        asMap(combine(ls.map(roundTrip)).packed) == unfused
+    }
+    assert(agree(fixedLines))
+    check(Prop.forAll(lines)(agree), 12)
+  }
+
+  test("merging K packed partials of random splits ≡ one combiner over all lines") {
+    val gen = for {
+      ls <- lines
+      k <- Gen.choose(1, 8)
+      parts <- Gen.listOfN(ls.size, Gen.choose(0, k - 1))
+    } yield (ls, parts)
+    def merged(ls: Seq[Array[Byte]], parts: Seq[Int]): Boolean = {
+      val whole = combine(ls)
+      val all = new WordCombiner
+      ls.zip(parts).groupBy(_._2).values.foreach(g => all.merge(combine(g.map(_._1)).packed))
+      val expected = asMap(whole.packed)
+      asMap(all.packed) == expected && all.total == whole.total &&
+        asMap(all.sorted) == expected
+    }
+    assert(merged(fixedLines, fixedLines.indices.map(_ % 5)))
+    check(Prop.forAll(gen) { case (ls, parts) => merged(ls, parts) }, 200)
+  }
+
+  test("the CLI pipeline over many scan tasks ≡ the DataFrame count, formatted") {
+    // through the seam under formattedBytes, which would otherwise set
+    // its own (1 MB floor) split size
+    val dir = Files.createTempDirectory("graft-wc-combiner")
+    try {
+      val ls = fixedLines ++
+        Seq(11L, 12L).flatMap(s => lines.pureApply(Gen.Parameters.default, Seed(s)))
+      val paths = ls.grouped(math.max(ls.size / 3, 1)).zipWithIndex.map { case (g, i) =>
+        val p = dir.resolve(f"part$i%02d.txt")
+        Files.write(p, g.flatMap(_ :+ '\n'.toByte).toArray)
+        p.toString
+      }.toSeq
+      val conf = spark.conf
+      val old = Seq("spark.sql.files.maxPartitionBytes", "spark.sql.files.openCostInBytes")
+        .map(k => k -> conf.getOption(k))
+      conf.set("spark.sql.files.maxPartitionBytes", "16384")
+      conf.set("spark.sql.files.openCostInBytes", "0")
+      try {
+        val tasks = WordCount.linesFromFiles(spark, paths).rdd.getNumPartitions
+        assert(tasks >= 10, s"only $tasks scan tasks")
+        val got = WordCount.formattedBytesInner(spark, paths, "in/part00.txt",
+          includeUnique = true)
+        val rows = WordCount.counts(WordCount.tokenize(WordCount.linesFromFiles(spark, paths),
+          "value")).select(col("word").cast("binary"), col("cnt")).collect()
+          .map(r => (r.getAs[Array[Byte]](0), r.getLong(1)))
+          .sortWith((a, b) => java.util.Arrays.compareUnsigned(a._1, b._1) < 0)
+        val exp = new java.io.ByteArrayOutputStream
+        exp.write(s"Filename: in/part00.txt, total words: ${rows.map(_._2).sum}\n"
+          .getBytes(UTF_8))
+        exp.write(s"Unique words found: ${rows.length}\n".getBytes(UTF_8))
+        rows.zipWithIndex.foreach { case ((w, c), i) =>
+          exp.write(s"[$i] ".getBytes(UTF_8)); exp.write(w); exp.write(s": $c\n".getBytes(UTF_8))
+        }
+        WordCountGoldenSpec.assertSameLines(got, exp.toByteArray)
+      } finally old.foreach { case (k, v) => v.fold(conf.unset(k))(conf.set(k, _)) }
+    } finally {
+      Files.list(dir).forEach(p => Files.delete(p))
+      Files.delete(dir)
+    }
+  }
+}

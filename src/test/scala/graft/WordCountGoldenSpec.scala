@@ -1,5 +1,8 @@
 package graft
 
+import java.nio.charset.StandardCharsets.{ISO_8859_1, UTF_8}
+import java.nio.file.{Files, Path}
+
 import org.scalatest.funsuite.AnyFunSuite
 import graft.operators.WordCount
 
@@ -14,7 +17,8 @@ import graft.operators.WordCount
   * byte-exact, `Text6.txt` a reconstruction of its token multiset). Only
   * the two full-corpus tests need the 29-file reference corpus in
   * `corpusDir`; without it they fail with a message naming that
-  * directory. */
+  * directory. The reconstructed-corpus test checks `golden_corpus.txt`
+  * without it, over a seeded corpus generated from the golden itself. */
 class WordCountGoldenSpec extends AnyFunSuite {
   private val corpusDir = "/root/reference/raw_text_input"
 
@@ -126,4 +130,88 @@ class WordCountGoldenSpec extends AnyFunSuite {
     assert(got.length === exp.length, s"byte length ${got.length} vs ${exp.length}")
     assert(got.toSeq === exp.toSeq)
   }
+
+  /** A corpus rebuilt from `golden_corpus.txt` (FIXTURES.md §1, a
+    * reconstruction, not the reference's bytes): every golden word
+    * `count` times, shuffled, decorated with FIXTURES.md §2's cases and
+    * spread over 29 files. The golden's words have no strippable edge
+    * byte and no ASCII upper case, so any decoration the normalize
+    * undoes must give the golden back, byte for byte. */
+  private def reconstructCorpus(dir: Path, golden: Array[Byte],
+      seed: Long): (String, Seq[String]) = {
+    // ISO-8859-1 maps each byte to one char and back, whatever the bytes
+    val rows = new String(golden, ISO_8859_1).split("\n")
+    val label = rows.head.stripPrefix("Filename: ").takeWhile(_ != ',')
+    val (words, counts) = rows.tail.map { r =>
+      val colon = r.lastIndexOf(": ")
+      (r.substring(r.indexOf("] ") + 2, colon).getBytes(ISO_8859_1), r.substring(colon + 2).toInt)
+    }.unzip
+    val ids = new Array[Int](counts.sum)
+    var k = 0
+    for ((c, w) <- counts.zipWithIndex; _ <- 0 until c) { ids(k) = w; k += 1 }
+    val rnd = new scala.util.Random(seed)
+    for (i <- ids.indices.reverse) {
+      val j = rnd.nextInt(i + 1); val t = ids(i); ids(i) = ids(j); ids(j) = t
+    }
+    def b(s: String) = s.getBytes(UTF_8)
+    val edges = Seq(",", ".", ";", "!", "?", "\"", "'", "(", ")", "[", "]", "--", "_")
+      .map(b) ++ Seq("“", "”", "¿", "é", "«").map(b)
+    val spaces = Seq(" ", " ", " ", " ", "\t", "\n", "\u000b", "\f", "\r", "\r\n").map(b)
+    def edge() = edges(rnd.nextInt(edges.size))
+    def upper(c: Byte) = if (c >= 'a' && c <= 'z') (c - 32).toByte else c
+    val files = 29
+    val paths = (0 until files).map { f =>
+      val path = dir.resolve(f"part$f%02d.txt")
+      val out = new java.io.BufferedOutputStream(Files.newOutputStream(path), 1 << 20)
+      try {
+        out.write(b("\uFEFF")) // a BOM before the first token, as in the Gutenberg files
+        for (i <- (ids.length.toLong * f / files).toInt until (ids.length.toLong * (f + 1) / files).toInt) {
+          val w = words(ids(i))
+          val roll = rnd.nextInt(100)
+          if (roll < 4) out.write(edge()) // 4%: a leading edge
+          out.write( // 8%: capitalized or upper case
+            if (roll >= 8) w
+            else if (rnd.nextInt(10) < 7) w.updated(0, upper(w(0)))
+            else w.map(upper))
+          if (roll >= 2 && roll < 12) out.write(edge()) // 10%: a trailing edge
+          if (rnd.nextInt(200) == 0) { // a punctuation-only token
+            out.write(spaces(0)); out.write(edge())
+          }
+          out.write(spaces(if (rnd.nextInt(12) == 0) rnd.nextInt(spaces.size) else 0))
+        }
+      } finally out.close()
+      path.toString
+    }
+    (label, paths)
+  }
+
+  test("reconstructed 29-file corpus: byte-identical to golden_corpus.txt, 2658450 / 56642") {
+    val exp = golden("golden_corpus.txt")
+    val dir = Files.createTempDirectory("graft-corpus")
+    try {
+      val (label, paths) = reconstructCorpus(dir, exp, seed = 20261019L)
+      assert(paths.size === 29)
+      val got = WordCount.formattedBytes(SparkTestSession.spark, paths, label,
+        includeUnique = false)
+      WordCountGoldenSpec.assertSameLines(got, exp)
+    } finally {
+      Files.list(dir).forEach(p => Files.delete(p))
+      Files.delete(dir)
+    }
+  }
+}
+
+object WordCountGoldenSpec {
+  /** Byte equality of two word-count outputs; a mismatch is reported as
+    * the first line that differs, not as the whole output. */
+  def assertSameLines(got: Array[Byte], exp: Array[Byte]): Unit =
+    if (!java.util.Arrays.equals(got, exp)) {
+      val g = new String(got, ISO_8859_1).split("\n", -1)
+      val e = new String(exp, ISO_8859_1).split("\n", -1)
+      val k = g.indices.find(i => i >= e.length || g(i) != e(i)).getOrElse(g.length)
+      def at(ls: Array[String]) = if (k < ls.length) ls(k).take(200) else "<end>"
+      org.scalatest.Assertions.fail(
+        s"outputs differ first at line $k: got '${at(g)}', expected '${at(e)}' " +
+          s"(${got.length} vs ${exp.length} bytes)")
+    }
 }
