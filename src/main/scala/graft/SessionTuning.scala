@@ -79,7 +79,8 @@ object SessionTuning {
     s
   }
 
-  /** Apply the low-latency shuffle I/O configs to a session builder. */
+  /** Apply [[tunedConfs]] to a session builder (some are static, so
+    * they must be set before the session starts). */
   def tuned(b: SparkSession.Builder): SparkSession.Builder = {
     tunedConfs(sys.env).foreach { case (k, v) => b.config(k, v) }
     b
@@ -115,6 +116,10 @@ object SessionTuning {
           env.getOrElse("SPARK_GRAFT_LOCAL_SHUFFLE_READER", "false"),
         "spark.sql.adaptive.coalescePartitions.minPartitionSize" ->
           env.getOrElse("SPARK_GRAFT_MIN_PARTITION_SIZE", "16k")) ++
+      // Spark's generated-class cache (static; default 100 classes)
+      // overflows on the curation pipelines: a warm op then recompiles
+      // 9–40 classes and runs ~0.3 s slower, in a random subset of JVMs.
+      Seq("spark.sql.codegen.cache.maxEntries" -> "2000") ++
       env.get("SPARK_GRAFT_CONF_EXTRA").toSeq
         .flatMap(parseConfs("SPARK_GRAFT_CONF_EXTRA", _))
 

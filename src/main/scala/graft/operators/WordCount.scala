@@ -1,9 +1,13 @@
 package graft.operators
 
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{FSDataInputStream, Path}
 import org.apache.spark.sql.{DataFrame, Encoders, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftshim.Shim
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
-import graft.functions.{NormalizeWord, WordCombiner, WordCounts}
+import org.apache.spark.util.SerializableConfiguration
+import graft.functions.{NormalizeWord, WordCombiner, WordCounts, WordNorm}
 import graft.sources.Tables
 
 /** The reference's one true query — tokenize / normalize / count / rank —
@@ -15,9 +19,10 @@ import graft.sources.Tables
   * (tokenize_normalize)) → HashAggregate(partial) → Exchange(hash word)
   * → HashAggregate(final).
   *
-  * The CLI path, [[formattedBytes]], skips that layout: one stage of
-  * scan tasks, each with an in-mapper combiner (the reference's
-  * hand-built one, `omp.cpp:92-141`), whose partials the driver merges.
+  * The CLI path, [[formattedBytes]], skips that layout and the line
+  * reader: one stage of tasks over whitespace-aligned byte ranges, each
+  * with an in-mapper combiner (the reference's hand-built one,
+  * `omp.cpp:92-141`), whose partials the driver merges.
   */
 object WordCount {
 
@@ -72,63 +77,170 @@ object WordCount {
   /** Reference CLI contract (`omp.cpp:219-223`, `hybrid.cpp:444-453`):
     * header + `[i] word: count` lines, ascending byte order.
     *
-    * One Spark job with no shuffle, the reference's own MapReduce shape:
-    *  - read+map: every scan task folds its lines, as raw bytes (so
+    * One Spark job with one stage and no shuffle, the reference's own
+    * MapReduce shape:
+    *  - read+map: the driver cuts the files, laid end to end, into
+    *    min(cores, ⌈total / 1 MB⌉) tasks of equal bytes ([[plan]]). Each
+    *    task reads its byte ranges raw through Hadoop `FileSystem`, as
+    *    `ifstream` reads them (no decompression, no decoding, so
     *    invalid-UTF-8 words round-trip exactly), into a
-    *    [[graft.functions.WordCombiner]] and returns it packed;
+    *    [[graft.functions.WordCombiner]] ([[countRanges]]) and returns it
+    *    packed;
     *  - reduce: the driver merges the partials into one combiner;
     *  - sort+print: the driver sorts that vocabulary by unsigned bytes
     *    and writes the lines into one byte buffer.
-    * Driver bound: it receives Σ per-partition vocabulary, at most scan
-    * tasks × vocabulary words; the output itself already needs the
-    * whole vocabulary on the driver (SURVEY.md §7.5's parity cost). The
-    * op is a typed Dataset action, not an RDD one, so it raises
-    * SQL-execution events (plan and confs capturable) like every other
-    * query. */
+    * A path that is missing, a directory or unreadable fails the call,
+    * before any task runs, with a message that names it. Paths are
+    * Hadoop paths (a bare path or any URI the session's file systems
+    * serve), read with the session's Hadoop configuration.
+    * Driver bound: it receives Σ per-task vocabulary, at most cores ×
+    * vocabulary words; the output itself already needs the whole
+    * vocabulary on the driver (SURVEY.md §7.5's parity cost). The op is
+    * a typed Dataset action, not an RDD one, so it raises SQL-execution
+    * events (plan and confs capturable) like every other query. */
   def formattedBytes(spark: SparkSession, paths: Seq[String],
-      headerLabel: String, includeUnique: Boolean): Array[Byte] = {
-    // Small-corpus scan-split tuning, scoped to this run (conf restored
-    // in the finally), re-chosen by a measured sweep (graft.tools.WcTune,
-    // 2026-08-14; r12): the default openCostInBytes (4 MB) inflates each
-    // small file to 4 MB for bin-packing, so a 29-file / 15 MB corpus
-    // packs into ~2 splits and tokenizes on 2 of 32 cores; the r11
-    // 256 KB floor over-corrected to ~60 splits whose per-task overhead
-    // dominated a 15 MB input. The sweep's optimum is ~1 MB splits
-    // (≈15 tasks — FEWER than cores, because a task costs more than
-    // tokenizing 1 MB); clamp keeps genuinely large inputs at the
-    // default 128 MB packing.
-    val totalBytes = paths.map(p => new java.io.File(p).length()).sum
-    val cores = spark.sparkContext.defaultParallelism.toLong
-    val target = math.min(
-      math.max(totalBytes / math.max(cores * 2L, 1L), 1024L * 1024),
-      128L * 1024 * 1024)
-    val conf = spark.conf
-    val oldMax = conf.getOption("spark.sql.files.maxPartitionBytes")
-    val oldCost = conf.getOption("spark.sql.files.openCostInBytes")
-    conf.set("spark.sql.files.maxPartitionBytes", target.toString)
-    conf.set("spark.sql.files.openCostInBytes", (64L * 1024).toString)
-    try formattedBytesInner(spark, paths, headerLabel, includeUnique)
-    finally {
-      oldMax.fold(conf.unset("spark.sql.files.maxPartitionBytes"))(
-        conf.set("spark.sql.files.maxPartitionBytes", _))
-      oldCost.fold(conf.unset("spark.sql.files.openCostInBytes"))(
-        conf.set("spark.sql.files.openCostInBytes", _))
-    }
+      headerLabel: String, includeUnique: Boolean): Array[Byte] =
+    formattedBytesInner(spark, paths, headerLabel, includeUnique, TaskBytes)
+
+  /** Input bytes a task gets at least, unless there are fewer than that
+    * per core: below about 1 MB a task's fixed cost outweighs its
+    * tokenizing. */
+  private final val TaskBytes = 1L << 20
+
+  /** A task's read buffer; it grows only to hold a longer token. */
+  private final val BufBytes = 1 << 20
+
+  /** [[formattedBytes]] with tasks of at least `taskBytes` (the seam
+    * the split tests drive). */
+  private[graft] def formattedBytesInner(spark: SparkSession, paths: Seq[String],
+      headerLabel: String, includeUnique: Boolean, taskBytes: Long): Array[Byte] = {
+    val hadoopConf = Shim.hadoopConf(spark)
+    val files = inputFiles(hadoopConf, paths)
+    val total = files.map(_._2).sum
+    val tasks = math.min(spark.sparkContext.defaultParallelism.toLong,
+      (total - 1).max(0L) / taskBytes + 1).toInt
+    val ranges = plan(files, tasks)
+    // broadcast, as Spark's file sources ship it: a copy in the closure
+    // would be deserialized by every task (~0.1 MB, ~20 ms each)
+    val conf = spark.sparkContext.broadcast(new SerializableConfiguration(hadoopConf))
+    // one row per task, and so one task per row (a local relation gets
+    // min(rows, cores) partitions); the rows are indices into `ranges`
+    val partials = try spark.createDataset(ranges.indices)(Encoders.scalaInt)
+      .mapPartitions((ts: Iterator[Int]) =>
+        ts.map(t => countRanges(ranges(t), conf.value.value, BufBytes)))(
+        Encoders.product[WordCounts])
+      .collect()
+    finally conf.destroy()
+    formatted(partials, headerLabel, includeUnique)
   }
 
-  /** The pipeline under whatever split conf is already set — the seam
-    * graft.tools.WcTune sweeps without the wrapper's own split tuning
-    * fighting the experiment. */
-  private[graft] def formattedBytesInner(spark: SparkSession, paths: Seq[String],
-      headerLabel: String, includeUnique: Boolean): Array[Byte] = {
-    val partials = linesFromFiles(spark, paths)
-      .select(col("value").cast("binary")).as(Encoders.BINARY)
-      .mapPartitions { (lines: Iterator[Array[Byte]]) =>
-        val c = new WordCombiner
-        lines.foreach(c.addLine)
-        Iterator.single(c.packed)
-      }(Encoders.product[WordCounts])
-      .collect()
+  /** Bytes `start until end` of the file at `path`. */
+  final case class FileRange(path: String, start: Long, end: Long)
+
+  /** Each path with its length, or an error naming the first path that
+    * is missing, a directory or cannot be opened. */
+  private def inputFiles(conf: Configuration, paths: Seq[String]): Seq[(String, Long)] =
+    paths.map { p =>
+      val path = new Path(p)
+      try {
+        val fs = path.getFileSystem(conf)
+        val st = fs.getFileStatus(path)
+        require(!st.isDirectory, s"word-count input $p is a directory")
+        fs.open(path).close()
+        p -> st.getLen
+      } catch {
+        case _: java.io.FileNotFoundException =>
+          throw new IllegalArgumentException(s"word-count input $p does not exist")
+        case e: java.io.IOException =>
+          throw new IllegalArgumentException(s"word-count input $p cannot be read: ${e.getMessage}")
+      }
+    }
+
+  /** Cuts `files` (path, length), laid end to end, into `tasks` runs of
+    * equal bytes (±1); a range never crosses a file, and a large file
+    * is split across tasks. Empty files and empty runs give no range. */
+  private[graft] def plan(files: Seq[(String, Long)], tasks: Int): Seq[Seq[FileRange]] = {
+    val nonEmpty = files.filter(_._2 > 0)
+    val starts = nonEmpty.scanLeft(0L)(_ + _._2)
+    def bound(t: Int) = (BigInt(starts.last) * t / tasks).toLong
+    (0 until tasks).map { t =>
+      val (lo, hi) = (bound(t), bound(t + 1))
+      nonEmpty.indices.filter(i => starts(i) < hi && starts(i + 1) > lo).map { i =>
+        FileRange(nonEmpty(i)._1, math.max(lo, starts(i)) - starts(i),
+          math.min(hi, starts(i + 1)) - starts(i))
+      }
+    }.filter(_.nonEmpty)
+  }
+
+  /** Counts the words `ranges` own into one combiner, streaming each
+    * range through a `bufBytes` buffer. A range owns every token that
+    * starts inside it, the reference's own rule (whitespace ends a token,
+    * and so does the end of a file), so any cut of a file into ranges
+    * counts it exactly once:
+    *  - at `start > 0`, if byte `start - 1` is not a space, the token
+    *    there began in an earlier range: skip to the first space;
+    *  - if byte `end - 1` is not a space, its token goes on past `end`:
+    *    read on up to the next space or the end of the file.
+    * A token cut off at a buffer refill is carried over to the next fill. */
+  private[graft] def countRanges(ranges: Seq[FileRange], conf: Configuration,
+      bufBytes: Int): WordCounts = {
+    val c = new WordCombiner
+    var buf = new Array[Byte](bufBytes)
+    for (r <- ranges) {
+      val path = new Path(r.path)
+      val in = path.getFileSystem(conf).open(path)
+      try {
+        val from =
+          if (r.start > 0 && !spaceAt(in, r.start - 1)) nextSpace(in, r.start, buf) else r.start
+        if (from < r.end) {
+          val until = if (spaceAt(in, r.end - 1)) r.end else nextSpace(in, r.end, buf)
+          in.seek(from)
+          var pos = from
+          var fill = 0 // buf(0 until fill): the start of a token cut off by the last fill
+          while (pos < until) {
+            if (fill == buf.length) buf = java.util.Arrays.copyOf(buf, 2 * buf.length)
+            val n = math.min(buf.length - fill, until - pos).toInt
+            in.readFully(buf, fill, n)
+            pos += n
+            var cut = fill + n
+            if (pos < until) while (cut > 0 && !WordNorm.isSpace(buf(cut - 1))) cut -= 1
+            c.addBytes(buf, 0, cut)
+            fill = fill + n - cut
+            System.arraycopy(buf, cut, buf, 0, fill)
+          }
+        }
+      } finally in.close()
+    }
+    c.packed
+  }
+
+  private def spaceAt(in: FSDataInputStream, pos: Long): Boolean = {
+    in.seek(pos)
+    WordNorm.isSpace(in.read().toByte)
+  }
+
+  /** The offset of the first space at or after `pos`, or the file's
+    * length if none follows. Reads in small steps: the token in the way
+    * is usually short. */
+  private def nextSpace(in: FSDataInputStream, pos: Long, buf: Array[Byte]): Long = {
+    in.seek(pos)
+    var p = pos
+    var n = in.read(buf, 0, math.min(buf.length, 256))
+    while (n > 0) {
+      var i = 0
+      while (i < n) {
+        if (WordNorm.isSpace(buf(i))) return p + i
+        i += 1
+      }
+      p += n
+      n = in.read(buf, 0, math.min(buf.length, 256))
+    }
+    p
+  }
+
+  /** The CLI output of the packed partials of one input. */
+  private[graft] def formatted(partials: Seq[WordCounts], headerLabel: String,
+      includeUnique: Boolean): Array[Byte] = {
     val all = new WordCombiner
     partials.foreach(all.merge)
     val header = (s"Filename: $headerLabel, total words: ${all.total}\n" +

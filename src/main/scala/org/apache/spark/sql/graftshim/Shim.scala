@@ -12,7 +12,8 @@ import org.apache.spark.sql.classic.ExpressionUtils
   * Kept to the minimum surface: Column↔Expression conversion and catalyst
   * function registration, needed so graft's custom codegen'd Expressions
   * (e.g. `normalize_word`) can be used as ordinary `Column`s without the
-  * boxing cost of a Scala UDF.
+  * boxing cost of a Scala UDF; and the session's Hadoop configuration,
+  * for a reader that opens files itself.
   */
 object Shim {
   /** Wrap a catalyst Expression as a user-facing Column. */
@@ -44,6 +45,11 @@ object Shim {
   def bloomMightContain(bloom: Column, value: Column): Column =
     ExpressionUtils.column(BloomFilterMightContain(
       ExpressionUtils.expression(bloom), ExpressionUtils.expression(value)))
+
+  /** The Hadoop configuration this session's file sources read with
+    * (the SparkContext's, plus the session's SQL-level overrides). */
+  def hadoopConf(spark: SparkSession): org.apache.hadoop.conf.Configuration =
+    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].sessionState.newHadoopConf()
 
   /** Register a catalyst expression builder as a SQL temp function on this
     * session (so `spark.sql("... normalize_word(x) ...")` also works). */

@@ -28,7 +28,8 @@ class SessionTuningSpec extends AnyFunSuite {
     assert(defaults === Map(
       "spark.file.transferTo" -> "false",
       "spark.sql.adaptive.localShuffleReader.enabled" -> "false",
-      "spark.sql.adaptive.coalescePartitions.minPartitionSize" -> "16k"))
+      "spark.sql.adaptive.coalescePartitions.minPartitionSize" -> "16k",
+      "spark.sql.codegen.cache.maxEntries" -> "2000"))
     assert(confs.last === ("spark.file.transferTo" -> "true"))
   }
 

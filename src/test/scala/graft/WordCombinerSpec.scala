@@ -18,7 +18,10 @@ import graft.operators.WordCount
   * `counts(tokenizeUnfused(…))` (built-ins), over generated byte lines
   * with every whitespace byte, strippable edges, ASCII upper case,
   * invalid UTF-8, empty lines, tokens longer than 64 KB and enough
-  * distinct words to grow the combiner's table and arena many times. */
+  * distinct words to grow the combiner's table and arena many times;
+  * and of the CLI path's byte-range tasks (`WordCount.plan` /
+  * `countRanges`), whose output must not depend on where the input is
+  * cut. */
 class WordCombinerSpec extends AnyFunSuite {
   private val spark = SparkTestSession.spark
 
@@ -143,44 +146,119 @@ class WordCombinerSpec extends AnyFunSuite {
     check(Prop.forAll(gen) { case (ls, parts) => merged(ls, parts) }, 200)
   }
 
-  test("the CLI pipeline over many scan tasks ≡ the DataFrame count, formatted") {
-    // through the seam under formattedBytes, which would otherwise set
-    // its own (1 MB floor) split size
-    val dir = Files.createTempDirectory("graft-wc-combiner")
-    try {
-      val ls = fixedLines ++
-        Seq(11L, 12L).flatMap(s => lines.pureApply(Gen.Parameters.default, Seed(s)))
-      val paths = ls.grouped(math.max(ls.size / 3, 1)).zipWithIndex.map { case (g, i) =>
-        val p = dir.resolve(f"part$i%02d.txt")
-        Files.write(p, g.flatMap(_ :+ '\n'.toByte).toArray)
-        p.toString
-      }.toSeq
-      val conf = spark.conf
-      val old = Seq("spark.sql.files.maxPartitionBytes", "spark.sql.files.openCostInBytes")
-        .map(k => k -> conf.getOption(k))
-      conf.set("spark.sql.files.maxPartitionBytes", "16384")
-      conf.set("spark.sql.files.openCostInBytes", "0")
-      try {
-        val tasks = WordCount.linesFromFiles(spark, paths).rdd.getNumPartitions
-        assert(tasks >= 10, s"only $tasks scan tasks")
-        val got = WordCount.formattedBytesInner(spark, paths, "in/part00.txt",
-          includeUnique = true)
-        val rows = WordCount.counts(WordCount.tokenize(WordCount.linesFromFiles(spark, paths),
-          "value")).select(col("word").cast("binary"), col("cnt")).collect()
-          .map(r => (r.getAs[Array[Byte]](0), r.getLong(1)))
-          .sortWith((a, b) => java.util.Arrays.compareUnsigned(a._1, b._1) < 0)
-        val exp = new java.io.ByteArrayOutputStream
-        exp.write(s"Filename: in/part00.txt, total words: ${rows.map(_._2).sum}\n"
-          .getBytes(UTF_8))
-        exp.write(s"Unique words found: ${rows.length}\n".getBytes(UTF_8))
-        rows.zipWithIndex.foreach { case ((w, c), i) =>
-          exp.write(s"[$i] ".getBytes(UTF_8)); exp.write(w); exp.write(s": $c\n".getBytes(UTF_8))
-        }
-        WordCountGoldenSpec.assertSameLines(got, exp.toByteArray)
-      } finally old.foreach { case (k, v) => v.fold(conf.unset(k))(conf.set(k, _)) }
-    } finally {
+  /** Writes `files` into a new temp dir, runs `f` on their paths and
+    * deletes them. */
+  private def withFiles[T](files: Seq[Array[Byte]])(f: Seq[String] => T): T = {
+    val dir = Files.createTempDirectory("graft-wc-ranges")
+    try f(files.zipWithIndex.map { case (b, i) =>
+      Files.write(dir.resolve(f"part$i%02d.txt"), b).toString
+    })
+    finally {
       Files.list(dir).forEach(p => Files.delete(p))
       Files.delete(dir)
+    }
+  }
+
+  /** The CLI output built by the test from the DataFrame count of the
+    * files' lines: header, then `[i] word: count` in unsigned byte order. */
+  private def dataFrameOutput(paths: Seq[String], label: String): Array[Byte] = {
+    val rows = WordCount.counts(WordCount.tokenize(WordCount.linesFromFiles(spark, paths),
+      "value")).select(col("word").cast("binary"), col("cnt")).collect()
+      .map(r => (r.getAs[Array[Byte]](0), r.getLong(1)))
+      .sortWith((a, b) => java.util.Arrays.compareUnsigned(a._1, b._1) < 0)
+    val exp = new java.io.ByteArrayOutputStream
+    exp.write(s"Filename: $label, total words: ${rows.map(_._2).sum}\n".getBytes(UTF_8))
+    exp.write(s"Unique words found: ${rows.length}\n".getBytes(UTF_8))
+    rows.zipWithIndex.foreach { case ((w, c), i) =>
+      exp.write(s"[$i] ".getBytes(UTF_8)); exp.write(w); exp.write(s": $c\n".getBytes(UTF_8))
+    }
+    exp.toByteArray
+  }
+
+  /** The CLI output of `paths` cut into tasks of `split` bytes and read
+    * through `buf`-byte buffers, each task run in this thread. */
+  private def rangesOutput(paths: Seq[String], split: Long, buf: Int): Array[Byte] = {
+    val files = paths.map(p => p -> Files.size(java.nio.file.Paths.get(p)))
+    val total = files.map(_._2).sum
+    val tasks = ((total - 1).max(0L) / split + 1).toInt
+    val conf = new org.apache.hadoop.conf.Configuration
+    WordCount.formatted(WordCount.plan(files, tasks).map(WordCount.countRanges(_, conf, buf)),
+      "in/part00.txt", includeUnique = true)
+  }
+
+  /** Files of generated lines joined by LF, CR or CRLF, each possibly
+    * empty and possibly without a line end after its last line. */
+  private val file: Gen[Array[Byte]] = for {
+    ls <- Gen.frequency(1 -> Gen.const(Nil), 6 -> Gen.choose(1, 20).flatMap(Gen.listOfN(_, line)))
+    ends <- Gen.listOfN(ls.size, Gen.oneOf("\n", "\r", "\r\n").map(_.getBytes(UTF_8)))
+    last <- Gen.oneOf(true, false)
+  } yield {
+    val body = ls.zip(ends).flatMap { case (l, e) => l ++ e }.toArray
+    if (last || ls.isEmpty) body else body.dropRight(ends.last.length)
+  }
+
+  test("byte-range tasks at 1–16-byte splits ≡ one split ≡ the DataFrame count, formatted") {
+    // every split offset of a run of all six whitespace bytes, CR/LF
+    // pairs and tokens that end at a file's last byte
+    val fixed = Seq("ab\t\n\u000b\u000c\r x\r\ny\r\n\r\nZz. \"q\" \u000b-w-", "",
+      "\r\nlast", " lead  trail \n", "a\rb\nc").map(_.getBytes(UTF_8))
+    withFiles(fixed) { paths =>
+      val exp = dataFrameOutput(paths, "in/part00.txt")
+      for (split <- 1 to 16; buf <- Seq(1, 3, 64)) withClue(s"split $split, buffer $buf: ") {
+        WordCountGoldenSpec.assertSameLines(rangesOutput(paths, split, buf), exp)
+      }
+    }
+    // a 70,000-byte token across many splits and buffer refills, next to
+    // short tokens on both sides of it
+    val long = Array.tabulate[Byte](70000)(i => ('a' + i % 26).toByte)
+    withFiles(Seq("x y ".getBytes(UTF_8) ++ long ++ " z\n".getBytes(UTF_8) ++ long,
+        long ++ "\r\n".getBytes(UTF_8))) { paths =>
+      val exp = dataFrameOutput(paths, "in/part00.txt")
+      for (split <- Seq(4999L, 16384L, 1L << 20); buf <- Seq(4096, 1 << 20))
+        withClue(s"split $split, buffer $buf: ") {
+          WordCountGoldenSpec.assertSameLines(rangesOutput(paths, split, buf), exp)
+        }
+    }
+    val gen = for {
+      fs <- Gen.choose(1, 4).flatMap(Gen.listOfN(_, file))
+      split <- Gen.choose(1, 16)
+      buf <- Gen.oneOf(1, 2, 5, 16, 1 << 10)
+    } yield (fs, split, buf)
+    check(Prop.forAll(gen) { case (fs, split, buf) =>
+      withFiles(fs) { paths =>
+        val got = rangesOutput(paths, split, buf)
+        java.util.Arrays.equals(got, rangesOutput(paths, Long.MaxValue, 1 << 20)) &&
+          java.util.Arrays.equals(got, dataFrameOutput(paths, "in/part00.txt"))
+      }
+    }, 40)
+  }
+
+  test("the CLI pipeline over many scan tasks ≡ the DataFrame count, formatted") {
+    val ls = fixedLines ++
+      Seq(11L, 12L).flatMap(s => lines.pureApply(Gen.Parameters.default, Seed(s)))
+    val files = ls.grouped(math.max(ls.size / 3, 1)).map(_.flatMap(_ :+ '\n'.toByte).toArray).toSeq
+    withFiles(files) { paths =>
+      val tasks = spark.sparkContext.defaultParallelism
+      val lengths = paths.map(p => p -> Files.size(java.nio.file.Paths.get(p)))
+      assert(tasks >= 2 && lengths.map(_._2).sum >= 16384L * tasks)
+      assert(WordCount.plan(lengths, tasks).size === tasks)
+      val before = spark.conf.getAll
+      val got = WordCount.formattedBytesInner(spark, paths, "in/part00.txt",
+        includeUnique = true, taskBytes = 16384)
+      assert(spark.conf.getAll === before, "the word count changed the session's confs")
+      WordCountGoldenSpec.assertSameLines(got, dataFrameOutput(paths, "in/part00.txt"))
+    }
+  }
+
+  test("a missing or directory input fails with a message that names it") {
+    withFiles(Seq("a b\n".getBytes(UTF_8))) { paths =>
+      val dir = java.nio.file.Paths.get(paths.head).getParent.toString
+      val missing = dir + "/no-such-file.txt"
+      for ((bad, why) <- Seq(missing -> "does not exist", dir -> "is a directory")) {
+        val e = intercept[IllegalArgumentException](
+          WordCount.formattedBytes(spark, paths :+ bad, "in/part00.txt", includeUnique = false))
+        assert(e.getMessage.contains(bad) && e.getMessage.contains(why), e.getMessage)
+      }
     }
   }
 }
