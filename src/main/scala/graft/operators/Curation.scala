@@ -389,18 +389,25 @@ object Curation {
     val docs = Tables.documents(spark, sfDir)
     val drop = Dedup.dedupNgramJaccard(spark, sfDir)
       .select($"doc_b".as("doc_id")).distinct()
-    val kept = docs.join(drop, Seq("doc_id"), "left_anti")
-    val good = kept.filter(TextAnalysis.qualityScore($"text") >= QualityCut)
-    good
-      .select($"lang", size(split($"text", " ")).cast("long").as("n_tokens"))
-      .select($"lang", $"n_tokens",
+    langSummary(docs.join(drop, Seq("doc_id"), "left_anti"))
+  }
+
+  /** The per-language summary tail of [[pipelineCurate]] and
+    * [[pipelineCurateFull]]: quality gate → per-document token and
+    * chunk counts → per-language doc/chunk/token totals, plus the total
+    * of each `audit` column (carried per document). */
+  private def langSummary(kept: DataFrame, audit: String*): DataFrame = {
+    val carried = audit.map(col)
+    kept.filter(TextAnalysis.qualityScore(col("text")) >= QualityCut)
+      .select((col("lang") +: carried :+
+        size(split(col("text"), " ")).cast("long").as("n_tokens")): _*)
+      .select((col("lang") +: carried :+ col("n_tokens") :+
         // chunk count = |starts 0, stride, … < n| = ceil(n / stride)
-        ceil($"n_tokens".cast("double") / ChunkStride).cast("long").as("n_chunks"))
-      .groupBy($"lang")
-      .agg(count(lit(1)).as("n_docs"),
-        sum($"n_chunks").as("n_chunks"),
-        sum($"n_tokens").as("n_tokens"))
-      .orderBy($"lang")
+        ceil(col("n_tokens").cast("double") / ChunkStride).cast("long").as("n_chunks")): _*)
+      .groupBy(col("lang"))
+      .agg(count(lit(1)).as("n_docs"), (sum(col("n_chunks")).as("n_chunks") +:
+        sum(col("n_tokens")).as("n_tokens") +: audit.map(a => sum(col(a)).as(a))): _*)
+      .orderBy(col("lang"))
   }
 
   /** [[pipelineCurate]] with PII redaction composed in FIRST — the
@@ -414,11 +421,10 @@ object Curation {
     * counts, shingles and quality ratios); `n_pii` additionally audits
     * the match counts straight through to the output.
     *
-    * Scale shape: identical to [[pipelineCurate]] plus per-row regexp
-    * map work on the document scan. The redacted frame feeds two
-    * consumers (pair search + keep side), so the scan-and-redact
-    * subtree is evaluated once per consumer — per-row map work, no
-    * added exchange; the drop list still broadcast-anti-joins. */
+    * Scale shape: [[pipelineCurate]]'s plus the per-row redaction
+    * regexes, which run after one upfront doc_id exchange
+    * ([[spreadRedacted]]) that the pair search and the keep side share;
+    * the drop list still broadcast-anti-joins. */
   def pipelineCurateFull(spark: SparkSession, sfDir: String): DataFrame =
     pipelineCurateFullOn(Tables.documents(spark, sfDir))
 
@@ -427,30 +433,28 @@ object Curation {
   private[graft] def pipelineCurateFullOn(docs: DataFrame): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
-    // spread-first redact (r21, the cc pipeline's staging): the regex
-    // stack runs above the upfront doc_id exchange instead of inside
-    // the one-task scan stage
-    val width = spark.sparkContext.defaultParallelism
-    val red = docs.filter($"doc_id".isNotNull)
-      .repartition(width, $"doc_id")
-      .select($"doc_id", $"lang",
-        TextAnalysis.piiCount($"text").as("n_pii"),
-        TextAnalysis.redactedCol($"text").as("text"))
+    val red = spreadRedacted(docs, $"lang", TextAnalysis.piiCount($"text").as("n_pii"))
     val drop = Dedup.dedupNgramJaccardOnSpread(red.select($"doc_id", $"text"))
       .select($"doc_b".as("doc_id")).distinct()
-    val kept = red.join(drop, Seq("doc_id"), "left_anti")
-    val good = kept.filter(TextAnalysis.qualityScore($"text") >= QualityCut)
-    good
-      .select($"lang", $"n_pii", size(split($"text", " ")).cast("long").as("n_tokens"))
-      .select($"lang", $"n_pii", $"n_tokens",
-        ceil($"n_tokens".cast("double") / ChunkStride).cast("long").as("n_chunks"))
-      .groupBy($"lang")
-      .agg(count(lit(1)).as("n_docs"),
-        sum($"n_chunks").as("n_chunks"),
-        sum($"n_tokens").as("n_tokens"),
-        sum($"n_pii").as("n_pii"))
-      .orderBy($"lang")
+    langSummary(red.join(drop, Seq("doc_id"), "left_anti"), "n_pii")
   }
+
+  /** Spread-first redact (r21): drop null-doc_id rows, spread the
+    * corpus over `defaultParallelism` doc_id partitions, THEN run the
+    * redaction regex stack, keeping `doc_id`, the `extra` columns and the
+    * redacted `text`. Hung straight off the scan, the regexes run inside
+    * the scan stage — ONE task on a small corpus (single-row-group
+    * file; measured 0.6 s serialized per consumer at sf0.1) — and the
+    * pair search then pays its own text exchange anyway. Spread first,
+    * and the regexes run `defaultParallelism`-way while the `OnSpread`
+    * searches and every other consumer share the one exchange
+    * (ReusedExchange). Null doc_ids go first because such a row cannot
+    * be deduplicated, joined or shard-assigned (see [[redactedKept]]). */
+  private def spreadRedacted(docs: DataFrame, extra: Column*): DataFrame =
+    docs.filter(col("doc_id").isNotNull)
+      .repartition(docs.sparkSession.sparkContext.defaultParallelism, col("doc_id"))
+      .select((col("doc_id") +: extra :+
+        TextAnalysis.redactedCol(col("text")).as("text")): _*)
 
   /** The MATERIALIZING form of the full pipeline — instead of a
     * per-language summary it emits the actual training SAMPLES a
@@ -470,16 +474,8 @@ object Curation {
     pipelineCurateSamplesOn(Tables.documents(spark, sfDir))
 
   private[graft] def pipelineCurateSamplesOn(docs: DataFrame): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    // spread-first redact + OnSpread search: the cc pipeline's r21
-    // staging (see there)
-    val width = spark.sparkContext.defaultParallelism
-    val red = docs.filter($"doc_id".isNotNull)
-      .repartition(width, $"doc_id")
-      .select($"doc_id", TextAnalysis.redactedCol($"text").as("text"))
-    val drop = Dedup.dedupNgramJaccardOnSpread(red)
-      .select($"doc_b".as("doc_id")).distinct()
+    val drop = Dedup.dedupNgramJaccardOnSpread(spreadRedacted(docs))
+      .select(col("doc_b").as("doc_id")).distinct()
     samplesOfKept(redactedKept(docs, drop))
   }
 
@@ -756,29 +752,24 @@ object Curation {
     pipelineCurateSamplesCcOn(Tables.documents(spark, sfDir))
 
   private[graft] def pipelineCurateSamplesCcOn(docs: DataFrame): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    // redact ABOVE an upfront doc_id exchange (r21): hung off the scan,
-    // the regex stack runs inside the scan stage — ONE task on a small
-    // corpus (measured 0.6 s serialized per consumer) — and the pair
-    // search would then pay its own text exchange anyway. Spread first,
-    // redact 32-way, and the search (OnSpread) + the chunk tail both
-    // ride the same exchange.
-    val width = spark.sparkContext.defaultParallelism
-    val red = docs.filter($"doc_id".isNotNull)
-      .repartition(width, $"doc_id")
-      .select($"doc_id", TextAnalysis.redactedCol($"text").as("text"))
-    // materialize the union pair search ONCE: `nodes` below and the edge
-    // frame inside dedupClustersOn both consume `pairs`, and without this
-    // checkpoint each consumer re-runs the whole shingle-expansion + two
-    // prefix-filtered searches (the dominant cost of the query). The
-    // checkpointed frame is pair-count-sized (bytes).
-    val pairs = Materialize.frame(Dedup.unionPairsOnSpread(red))
-    val nodes = pairs.select($"doc_a".as("doc_id"))
-      .union(pairs.select($"doc_b".as("doc_id"))).distinct()
-    val drop = Dedup.dedupClustersOn(nodes, pairs)
-      .filter($"cluster" =!= $"doc_id").select($"doc_id")
+    val drop = clusterLabels(spreadRedacted(docs))
+      .filter(col("cluster") =!= col("doc_id")).select(col("doc_id"))
     samplesOfKept(redactedKept(docs, drop))
+  }
+
+  /** (doc_id, cluster) labels, cluster = component minimum, over the
+    * union pair graph of a [[spreadRedacted]] frame. Only ids on some
+    * edge are labelled: singletons are never dropped, so they need no
+    * label. The pair search materializes ONCE: the node list and the
+    * edge frame inside [[Dedup.dedupClustersOn]] both consume it, and
+    * without the checkpoint each would re-run the shingle expansion
+    * and both prefix-filtered searches (the query's dominant cost). The
+    * checkpoint is pair-count-sized (bytes). */
+  private def clusterLabels(red: DataFrame): DataFrame = {
+    val pairs = Materialize.frame(Dedup.unionPairsOnSpread(red))
+    val nodes = pairs.select(col("doc_a").as("doc_id"))
+      .union(pairs.select(col("doc_b").as("doc_id"))).distinct()
+    Dedup.dedupClustersOn(nodes, pairs)
   }
 
   /** [[pipelineCurateSamplesCc]] with a QUALITY-AWARE representative:
@@ -803,17 +794,7 @@ object Curation {
   private[graft] def pipelineCurateSamplesCcqOn(docs: DataFrame): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
-    // spread-first redact + OnSpread search: the cc pipeline's r21
-    // staging (see there)
-    val width = spark.sparkContext.defaultParallelism
-    val red = docs.filter($"doc_id".isNotNull)
-      .repartition(width, $"doc_id")
-      .select($"doc_id", TextAnalysis.redactedCol($"text").as("text"))
-    // same materialize-once plumbing as the cc pipeline (see there)
-    val pairs = Materialize.frame(Dedup.unionPairsOnSpread(red))
-    val nodes = pairs.select($"doc_a".as("doc_id"))
-      .union(pairs.select($"doc_b".as("doc_id"))).distinct()
-    val labels = Dedup.dedupClustersOn(nodes, pairs)
+    val labels = clusterLabels(spreadRedacted(docs))
     // quality for cluster members only: join against the RAW text (the
     // parquet scan, no regex) and redact+score AFTER the join, so the
     // three redaction regexes run on the pair-node-sized match set —
@@ -886,15 +867,9 @@ object Curation {
     // ingested; building them inline keeps the driver-contract query
     // self-contained, and the FromArtifacts seam below (pinned by
     // CurationSpec's written-artifact round-trip) is the production
-    // entry where they are read back from storage instead.
-    // Spread-first redact (r21): three consumers (doc-hash, minhash,
-    // chunk-hash) each re-derive this frame; with the redact hung off
-    // the scan it ran one-task per consumer (single-row-group corpus
-    // file), and the upfront exchange is shared via ReusedExchange.
-    val width = spark.sparkContext.defaultParallelism
-    val redP = prior.filter($"doc_id".isNotNull)
-      .repartition(width, $"doc_id")
-      .select($"doc_id", TextAnalysis.redactedCol($"text").as("text"))
+    // entry where they are read back from storage instead. Three
+    // consumers (doc-hash, minhash, chunk-hash) share redP's exchange.
+    val redP = spreadRedacted(prior)
     pipelineCurateSamplesIncrementalFromArtifacts(
       redP.select(md5($"text").as("h")).distinct(),
       Dedup.minhashHashed(redP),
@@ -913,12 +888,9 @@ object Curation {
       fresh: DataFrame): DataFrame = {
     val spark = fresh.sparkSession
     import spark.implicits._
-    // spread-first redact on the delta too (r21): the keep-first window
-    // exchanges on the content hash, so scan-hung redaction ran inside
-    // the one-task scan stage
-    val redF = fresh.filter($"doc_id".isNotNull)
-      .repartition(spark.sparkContext.defaultParallelism, $"doc_id")
-      .select($"doc_id", TextAnalysis.redactedCol($"text").as("text"))
+    // spread-first on the delta too: the keep-first window exchanges on
+    // the content hash, so scan-hung redaction ran in the scan stage
+    val redF = spreadRedacted(fresh)
     // stage 1: exact-incremental — keep-first per content hash WITHIN
     // the delta (row_number, the keep-first form samplesOfKept uses),
     // then the prior hash-index anti-join
@@ -955,9 +927,7 @@ object Curation {
     val good = kept.filter(TextAnalysis.qualityScore($"text") >= QualityCut)
     // stages 4–5: chunk fan-out, keep-first within the delta, prior
     // chunk-index suppression
-    val w = Window.partitionBy(md5($"chunk_text")).orderBy($"doc_id", $"chunk_idx")
-    chunksUnordered(good)
-      .withColumn("rn", row_number().over(w)).filter($"rn" === 1).drop("rn")
+    keepFirstChunks(good)
       .join(priorChunks, md5($"chunk_text") === $"ch", "left_anti")
       .select($"doc_id", $"chunk_idx", $"chunk_text", $"n_tokens")
       .orderBy($"doc_id", $"chunk_idx")
@@ -1008,9 +978,14 @@ object Curation {
   /** The chunk-expansion + keep-first tail over an already
     * quality-gated frame — the seam the learned-gate pipeline variant
     * injects its gate through. */
-  private[graft] def samplesOfGood(good: DataFrame): DataFrame = {
-    val spark = good.sparkSession
-    import spark.implicits._
+  private[graft] def samplesOfGood(good: DataFrame): DataFrame =
+    keepFirstChunks(good)
+      .select(col("doc_id"), col("chunk_idx"), col("chunk_text"), col("n_tokens"))
+      .orderBy(col("doc_id"), col("chunk_idx"))
+
+  /** Chunk fan-out of `good`, then the first chunk of each content hash
+    * by (doc_id, chunk_idx), unordered. */
+  private def keepFirstChunks(good: DataFrame): DataFrame = {
     // Keep-first in ONE pass: row_number over the content-hash partition
     // (the oracle's own formulation). Rounds 5–10 used a min(struct)
     // representative agg + semi-join — TWO consumers of the chunk
@@ -1028,24 +1003,11 @@ object Curation {
     // 260k-row exploded frame) does not apply.
     // chunksUnordered, not chunksOf: the window exchange would discard
     // a trailing sort anyway (the streaming twin already takes this path)
-    samplesOfChunks(chunksUnordered(good))
-  }
-
-  /** The keep-first + ordered-output tail over an ALREADY-EXPANDED
-    * chunk frame — the seam the dsir pipeline uses to run the chunk
-    * fan-out concurrently with the pair search (expansion is doc-local,
-    * so expanding a superset and filtering after is identical). */
-  private def samplesOfChunks(chunks: DataFrame): DataFrame = {
-    val spark = chunks.sparkSession
-    import spark.implicits._
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(md5($"chunk_text")).orderBy($"doc_id", $"chunk_idx")
-    chunks
+    val w = Window.partitionBy(md5(col("chunk_text"))).orderBy(col("doc_id"), col("chunk_idx"))
+    chunksUnordered(good)
       .withColumn("rn", row_number().over(w))
-      .filter($"rn" === 1)
+      .filter(col("rn") === 1)
       .drop("rn")
-      .select($"doc_id", $"chunk_idx", $"chunk_text", $"n_tokens")
-      .orderBy($"doc_id", $"chunk_idx")
   }
 
   /** Reflow width for the benched corpus's LINE view: the synthetic
@@ -2333,6 +2295,94 @@ object Curation {
 
   private val chunksSql = chunksSqlFrom("documents")
 
+  /** `red(doc_id, extra…, text)`: `src` with its text redacted. */
+  private[graft] def redSql(src: String, extra: String*): String =
+    s"""red AS (
+       |  SELECT doc_id, ${(extra :+ s"${TextAnalysis.redactedSqlExpr} AS text").mkString(", ")}
+       |  FROM $src
+       |)""".stripMargin
+
+  /** `good`: the rows of `src` whose quality clears [[QualityCut]]. */
+  private[graft] def goodSql(src: String): String =
+    s"""good AS (
+       |  SELECT * FROM $src
+       |  WHERE ${TextAnalysis.qualitySqlExpr} >= $QualityCut
+       |)""".stripMargin
+
+  /** `redp` / `redf`: the prior and the fresh snapshot slices of `red`. */
+  private[graft] val snapshotSplitSql: String =
+    s"""redp AS (SELECT doc_id, text FROM red
+       |         WHERE doc_id % ${Dedup.SnapshotMod} < ${Dedup.SnapshotNewMin}),
+       |redf AS (SELECT doc_id, text FROM red
+       |         WHERE doc_id % ${Dedup.SnapshotMod} >= ${Dedup.SnapshotNewMin})""".stripMargin
+
+  /** `chunks` + `sel`: the chunk fan-out of `good(doc_id, text)`, each
+    * chunk ranked among the chunks of the same content hash by
+    * (doc_id, chunk_idx). */
+  private val keepFirstCtes: String =
+    s"""chunks AS (${chunksSqlFrom("good")}),
+       |sel AS (
+       |  SELECT doc_id, chunk_idx, chunk_text, n_tokens,
+       |    row_number() OVER (PARTITION BY md5(chunk_text)
+       |      ORDER BY doc_id, chunk_idx) AS rn
+       |  FROM chunks
+       |)""".stripMargin
+
+  /** The keep-first tail over `good(doc_id, text)`, ending the statement:
+    * the first chunk of each content hash, in sample order. The oracle
+    * of [[samplesOfGood]]. */
+  private[graft] val keepFirstSql: String =
+    s"""$keepFirstCtes
+       |SELECT doc_id, chunk_idx, chunk_text, n_tokens
+       |FROM sel WHERE rn = 1
+       |ORDER BY doc_id, chunk_idx""".stripMargin
+
+  /** [[keepFirstSql]] minus every chunk whose content is also a chunk of
+    * `prior`: the tail of the incremental pipelines, where the prior
+    * snapshot owns its chunks. */
+  private[graft] def keepFirstNotInSql(prior: String): String =
+    s"""$keepFirstCtes,
+       |pchunks AS (${chunksSqlFrom(prior)})
+       |SELECT doc_id, chunk_idx, chunk_text, n_tokens
+       |FROM sel s WHERE rn = 1
+       |  AND NOT EXISTS (SELECT 1 FROM pchunks p
+       |                  WHERE md5(p.chunk_text) = md5(s.chunk_text))
+       |ORDER BY doc_id, chunk_idx""".stripMargin
+
+  /** The samples oracle over the redact → pair-drop → quality chain of
+    * `src` (the `cur_pipeline_samples` and lines pipelines). */
+  private def redDropSamplesSql(src: String): String =
+    s"""${redSql(src)},
+       |${Dedup.pairDropSql("red")},
+       |${goodSql("kept")},
+       |$keepFirstSql""".stripMargin
+
+  /** The `cur_pipeline_samples` oracle. */
+  private val samplesSql: String = s"WITH ${redDropSamplesSql("documents")}"
+
+  /** Shard ids over a samples statement: the exclusive token prefix sum
+    * in (doc_id, chunk_idx) order, integer-divided by [[ShardBudget]] —
+    * the window formulation is the readable spec of [[shardAssignOn]]'s
+    * two passes. */
+  private[graft] def shardAssignSql(samplesSql: String): String =
+    s"""WITH samples AS (
+       |$samplesSql
+       |)
+       |SELECT doc_id, chunk_idx, chunk_text, n_tokens,
+       |  CAST(coalesce(sum(n_tokens) OVER (ORDER BY doc_id, chunk_idx
+       |    ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
+       |    // $ShardBudget AS BIGINT) AS shard
+       |FROM samples ORDER BY doc_id, chunk_idx""".stripMargin
+
+  /** The per-language summary over `good(lang, text, audit…)`, ending the
+    * statement — the oracle of [[langSummary]]. */
+  private def langSummarySql(audit: String*): String =
+    s"""SELECT lang, count(*) AS n_docs,
+       |  CAST(sum(ceil(n_tokens::DOUBLE / $ChunkStride)) AS BIGINT) AS n_chunks,
+       |  CAST(sum(n_tokens) AS BIGINT) AS n_tokens${audit.map(a => s",\n  CAST(sum($a) AS BIGINT) AS $a").mkString}
+       |FROM (SELECT *, len(string_split(text, ' ')) AS n_tokens FROM good)
+       |GROUP BY lang ORDER BY lang""".stripMargin
+
   /** Oracle for the STREAMING chunk near-dup (see
     * Streaming.streamDedupChunksNgram): the UNCAPPED exact-Jaccard pair
     * search over the packed-key chunk CTE. Uncapped — unlike
@@ -2454,54 +2504,7 @@ object Curation {
        |reb AS (
        |  SELECT doc_id, string_agg(line, ' ' ORDER BY line_idx) AS text
        |  FROM rk WHERE rn = 1 GROUP BY doc_id),
-       |red AS (
-       |  SELECT doc_id, ${TextAnalysis.redactedSqlExpr} AS text
-       |  FROM reb
-       |),
-       |pairs AS (${Dedup.cappedJaccardSqlFrom("red")}),
-       |kept AS (
-       |  SELECT doc_id, text FROM red
-       |  WHERE doc_id NOT IN (SELECT doc_b FROM pairs)
-       |),
-       |good AS (
-       |  SELECT doc_id, text FROM kept
-       |  WHERE ${TextAnalysis.qualitySqlExpr} >= $QualityCut
-       |),
-       |chunks AS (${chunksSqlFrom("good")}),
-       |sel AS (
-       |  SELECT doc_id, chunk_idx, chunk_text, n_tokens,
-       |    row_number() OVER (PARTITION BY md5(chunk_text)
-       |      ORDER BY doc_id, chunk_idx) AS rn
-       |  FROM chunks
-       |)
-       |SELECT doc_id, chunk_idx, chunk_text, n_tokens
-       |FROM sel WHERE rn = 1 ORDER BY doc_id, chunk_idx""".stripMargin
-
-  /** The samples pipeline's WITH-body (red → pairs → kept → good →
-    * chunks → sel) — the ONE SQL definition shared by the
-    * `cur_pipeline_samples` oracle and the shard-assignment oracle
-    * built on its output, so the two cannot drift. */
-  private def samplesSqlCtes: String =
-    s"""red AS (
-       |  SELECT doc_id, ${TextAnalysis.redactedSqlExpr} AS text
-       |  FROM documents
-       |),
-       |pairs AS (${Dedup.cappedJaccardSqlFrom("red")}),
-       |kept AS (
-       |  SELECT doc_id, text FROM red
-       |  WHERE doc_id NOT IN (SELECT doc_b FROM pairs)
-       |),
-       |good AS (
-       |  SELECT doc_id, text FROM kept
-       |  WHERE ${TextAnalysis.qualitySqlExpr} >= $QualityCut
-       |),
-       |chunks AS (${chunksSqlFrom("good")}),
-       |sel AS (
-       |  SELECT doc_id, chunk_idx, chunk_text, n_tokens,
-       |    row_number() OVER (PARTITION BY md5(chunk_text)
-       |      ORDER BY doc_id, chunk_idx) AS rn
-       |  FROM chunks
-       |)""".stripMargin
+       |${redDropSamplesSql("reb")}""".stripMargin
 
   /** Cosine over two DOUBLE[]-valued SQL expressions — the
     * Similarity.cosListSql shape (sequential dot / (√·√)), local copy
@@ -2581,15 +2584,8 @@ object Curation {
     // the source-capped pipeline: redact + pair-drop CTEs as the other
     // samples oracles, the rank-cap gate, the shared chunk tail
     "cur_pipeline_samples_caps" ->
-      s"""WITH red AS (
-         |  SELECT doc_id, source, ${TextAnalysis.redactedSqlExpr} AS text
-         |  FROM documents
-         |),
-         |pairs AS (${Dedup.cappedJaccardSqlFrom("red")}),
-         |kept AS (
-         |  SELECT doc_id, source, text FROM red
-         |  WHERE doc_id NOT IN (SELECT doc_b FROM pairs)
-         |),
+      s"""WITH ${redSql("documents", "source")},
+         |${Dedup.pairDropSql("red")},
          |ck AS (
          |  SELECT doc_id, source,
          |    md5_number_lower(CAST(doc_id AS VARCHAR)) & $HashMask53 AS hbits
@@ -2604,15 +2600,7 @@ object Curation {
          |  SELECT k.doc_id, k.text FROM kept k JOIN rk USING (doc_id)
          |  WHERE rn <= $SourceCapN
          |),
-         |chunks AS (${chunksSqlFrom("good")}),
-         |sel AS (
-         |  SELECT doc_id, chunk_idx, chunk_text, n_tokens,
-         |    row_number() OVER (PARTITION BY md5(chunk_text)
-         |      ORDER BY doc_id, chunk_idx) AS rn
-         |  FROM chunks
-         |)
-         |SELECT doc_id, chunk_idx, chunk_text, n_tokens
-         |FROM sel WHERE rn = 1 ORDER BY doc_id, chunk_idx""".stripMargin,
+         |$keepFirstSql""".stripMargin,
     "cur_dsir_weights" ->
       s"""WITH $dsirWeightCtes
          |SELECT doc_id, n_feats, weight FROM dsir_w ORDER BY doc_id""".stripMargin,
@@ -2652,15 +2640,7 @@ object Curation {
          |  FROM documents d JOIN dsir_rk USING (doc_id), dsir_n
          |  WHERE rk <= keep
          |),
-         |chunks AS (${chunksSqlFrom("good")}),
-         |sel AS (
-         |  SELECT doc_id, chunk_idx, chunk_text, n_tokens,
-         |    row_number() OVER (PARTITION BY md5(chunk_text)
-         |      ORDER BY doc_id, chunk_idx) AS rn
-         |  FROM chunks
-         |)
-         |SELECT doc_id, chunk_idx, chunk_text, n_tokens
-         |FROM sel WHERE rn = 1 ORDER BY doc_id, chunk_idx""".stripMargin,
+         |$keepFirstSql""".stripMargin,
     // the engine's op tree mirrored VERBATIM: integer-quantized sqrt
     // weights (sums exact), one left-to-right IEEE division chain,
     // 53-bit dyadic hash fractions, output probability on the 2^-20
@@ -2935,23 +2915,12 @@ object Curation {
          |  CAST(doc_b % $ChunkKeyBase AS INT) AS idx_b,
          |  containment
          |FROM pairs ORDER BY doc_a, idx_a, doc_b, idx_b""".stripMargin,
-    // the materializing pipeline: every stage's SQL spliced from the
-    // same constants, chunk-level keep-first via row_number over the
-    // chunk-hash partition — the output hash covers every emitted
-    // sample's full text
     // the learned-gate variant: qm CTEs (ONE definition, spliced from
     // TextAnalysis) fit on the prior slice of red, score kept, and the
     // gate is the exact-integer 2*sum_q >= n_feats*Q prior test
     "cur_pipeline_samples_qm" ->
-      s"""WITH red AS (
-         |  SELECT doc_id, ${TextAnalysis.redactedSqlExpr} AS text
-         |  FROM documents
-         |),
-         |pairs AS (${Dedup.cappedJaccardSqlFrom("red")}),
-         |kept AS (
-         |  SELECT doc_id, text FROM red
-         |  WHERE doc_id NOT IN (SELECT doc_b FROM pairs)
-         |),
+      s"""WITH ${redSql("documents")},
+         |${Dedup.pairDropSql("red")},
          |${TextAnalysis.qmScoreCtes(
              s"(SELECT text FROM red WHERE doc_id % ${Dedup.SnapshotMod} < ${Dedup.SnapshotNewMin})",
              "kept")},
@@ -2960,34 +2929,14 @@ object Curation {
          |  JOIN qm_scores USING (doc_id)
          |  WHERE 2 * sum_q >= n_feats * ${TextAnalysis.QmQuantum}
          |),
-         |chunks AS (${chunksSqlFrom("good")}),
-         |sel AS (
-         |  SELECT doc_id, chunk_idx, chunk_text, n_tokens,
-         |    row_number() OVER (PARTITION BY md5(chunk_text)
-         |      ORDER BY doc_id, chunk_idx) AS rn
-         |  FROM chunks
-         |)
-         |SELECT doc_id, chunk_idx, chunk_text, n_tokens
-         |FROM sel WHERE rn = 1 ORDER BY doc_id, chunk_idx""".stripMargin,
-    "cur_pipeline_samples" ->
-      s"""WITH $samplesSqlCtes
-         |SELECT doc_id, chunk_idx, chunk_text, n_tokens
-         |FROM sel WHERE rn = 1 ORDER BY doc_id, chunk_idx""".stripMargin,
-    // shard assignment over the samples pipeline's own output: the
-    // exclusive token prefix sum in (doc_id, chunk_idx) order, integer-
-    // divided by the shard budget — the window formulation IS the
-    // readable spec of the engine's two-pass implementation
-    "cur_shard_assign" ->
-      s"""WITH $samplesSqlCtes,
-         |samples AS (
-         |  SELECT doc_id, chunk_idx, chunk_text, n_tokens
-         |  FROM sel WHERE rn = 1
-         |)
-         |SELECT doc_id, chunk_idx, chunk_text, n_tokens,
-         |  CAST(coalesce(sum(n_tokens) OVER (ORDER BY doc_id, chunk_idx
-         |    ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-         |    // $ShardBudget AS BIGINT) AS shard
-         |FROM samples ORDER BY doc_id, chunk_idx""".stripMargin,
+         |$keepFirstSql""".stripMargin,
+    // the materializing pipeline: every stage's SQL spliced from the
+    // same constants, chunk-level keep-first via row_number over the
+    // chunk-hash partition — the output hash covers every emitted
+    // sample's full text
+    "cur_pipeline_samples" -> samplesSql,
+    // shard assignment over the samples pipeline's own output
+    "cur_shard_assign" -> shardAssignSql(samplesSql),
     // the C4-order composition: line filter + line dedup on ORIGINAL
     // indexes, space-joined rebuild, then the samples CTEs verbatim
     // over the rebuilt corpus
@@ -3008,14 +2957,8 @@ object Curation {
     // quality, chunk arithmetic — over the snapshot split; prior-side
     // suppression via NOT EXISTS on the doc-hash and chunk-hash indexes
     "cur_pipeline_samples_incremental" ->
-      s"""WITH red AS (
-         |  SELECT doc_id, ${TextAnalysis.redactedSqlExpr} AS text
-         |  FROM documents
-         |),
-         |redp AS (SELECT doc_id, text FROM red
-         |         WHERE doc_id % ${Dedup.SnapshotMod} < ${Dedup.SnapshotNewMin}),
-         |redf AS (SELECT doc_id, text FROM red
-         |         WHERE doc_id % ${Dedup.SnapshotMod} >= ${Dedup.SnapshotNewMin}),
+      s"""WITH ${redSql("documents")},
+         |$snapshotSplitSql,
          |keyed AS (
          |  SELECT doc_id, text, md5(text) AS h,
          |    row_number() OVER (PARTITION BY md5(text) ORDER BY doc_id) AS rn
@@ -3053,24 +2996,8 @@ object Curation {
          |  SELECT doc_id, text FROM novel n
          |  WHERE NOT EXISTS (SELECT 1 FROM dropped d WHERE d.doc_id = n.doc_id)
          |),
-         |good AS (
-         |  SELECT doc_id, text FROM kept
-         |  WHERE ${TextAnalysis.qualitySqlExpr} >= $QualityCut
-         |),
-         |chunks AS (${chunksSqlFrom("good")}),
-         |pchunks AS (${chunksSqlFrom("redp")}),
-         |sel AS (
-         |  SELECT doc_id, chunk_idx, chunk_text, n_tokens,
-         |    row_number() OVER (PARTITION BY md5(chunk_text)
-         |      ORDER BY doc_id, chunk_idx) AS rn
-         |  FROM chunks
-         |)
-         |SELECT doc_id, chunk_idx, chunk_text, n_tokens
-         |FROM sel s
-         |WHERE rn = 1
-         |  AND NOT EXISTS (SELECT 1 FROM pchunks p
-         |                  WHERE md5(p.chunk_text) = md5(s.chunk_text))
-         |ORDER BY doc_id, chunk_idx""".stripMargin,
+         |${goodSql("kept")},
+         |${keepFirstNotInSql("redp")}""".stripMargin,
     // the cluster-keep materializing pipeline: the SAME recursive-CTE
     // transitive closure as the dedup_clusters_all oracle, spliced over
     // the redacted CTE (both edge SQLs from their single-source
@@ -3078,38 +3005,15 @@ object Curation {
     // quality → chunk → keep-first tail
     "cur_pipeline_samples_cc" ->
       s"""WITH RECURSIVE
-         |red AS (
-         |  SELECT doc_id, ${TextAnalysis.redactedSqlExpr} AS text
-         |  FROM documents
-         |),
-         |j AS (SELECT doc_a, doc_b FROM (${Dedup.cappedJaccardSqlFrom("red")})),
-         |cq AS (SELECT doc_a, doc_b FROM (${Dedup.containmentSqlFrom("red")})),
-         |p AS (SELECT doc_a, doc_b FROM j UNION SELECT doc_a, doc_b FROM cq),
-         |e AS (SELECT doc_a AS a, doc_b AS b FROM p
-         |      UNION SELECT doc_b, doc_a FROM p),
-         |reach(n, m) AS (
-         |  SELECT doc_id, doc_id FROM red
-         |  UNION
-         |  SELECT e.b, reach.m FROM e JOIN reach ON e.a = reach.n
-         |),
-         |lab AS (SELECT n AS doc_id, min(m) AS cluster FROM reach GROUP BY n),
+         |${redSql("documents")},
+         |${Dedup.unionPairCtesFrom("red")},
+         |${Dedup.closureCtes("red")},
          |kept AS (
          |  SELECT r.doc_id, r.text FROM red r JOIN lab ON r.doc_id = lab.doc_id
          |  WHERE lab.cluster = lab.doc_id
          |),
-         |good AS (
-         |  SELECT doc_id, text FROM kept
-         |  WHERE ${TextAnalysis.qualitySqlExpr} >= $QualityCut
-         |),
-         |chunks AS (${chunksSqlFrom("good")}),
-         |sel AS (
-         |  SELECT doc_id, chunk_idx, chunk_text, n_tokens,
-         |    row_number() OVER (PARTITION BY md5(chunk_text)
-         |      ORDER BY doc_id, chunk_idx) AS rn
-         |  FROM chunks
-         |)
-         |SELECT doc_id, chunk_idx, chunk_text, n_tokens
-         |FROM sel WHERE rn = 1 ORDER BY doc_id, chunk_idx""".stripMargin,
+         |${goodSql("kept")},
+         |$keepFirstSql""".stripMargin,
     // the quality-aware cluster keep: the same closure CTE, then the
     // representative is the per-cluster argmax (quality, −doc_id) —
     // row_number over (q DESC, doc_id ASC) mirrors the engine's
@@ -3119,21 +3023,9 @@ object Curation {
     // so `kept = reps` covers the engine's never-labeled singletons.
     "cur_pipeline_samples_ccq" ->
       s"""WITH RECURSIVE
-         |red AS (
-         |  SELECT doc_id, ${TextAnalysis.redactedSqlExpr} AS text
-         |  FROM documents
-         |),
-         |j AS (SELECT doc_a, doc_b FROM (${Dedup.cappedJaccardSqlFrom("red")})),
-         |cq AS (SELECT doc_a, doc_b FROM (${Dedup.containmentSqlFrom("red")})),
-         |p AS (SELECT doc_a, doc_b FROM j UNION SELECT doc_a, doc_b FROM cq),
-         |e AS (SELECT doc_a AS a, doc_b AS b FROM p
-         |      UNION SELECT doc_b, doc_a FROM p),
-         |reach(n, m) AS (
-         |  SELECT doc_id, doc_id FROM red
-         |  UNION
-         |  SELECT e.b, reach.m FROM e JOIN reach ON e.a = reach.n
-         |),
-         |lab AS (SELECT n AS doc_id, min(m) AS cluster FROM reach GROUP BY n),
+         |${redSql("documents")},
+         |${Dedup.unionPairCtesFrom("red")},
+         |${Dedup.closureCtes("red")},
          |scored AS (
          |  SELECT doc_id, cluster, ${TextAnalysis.qualitySqlExpr} AS q
          |  FROM (SELECT lab.doc_id AS doc_id, lab.cluster AS cluster,
@@ -3151,45 +3043,18 @@ object Curation {
          |  SELECT doc_id, text FROM red
          |  WHERE doc_id IN (SELECT doc_id FROM reps)
          |),
-         |good AS (
-         |  SELECT doc_id, text FROM kept
-         |  WHERE ${TextAnalysis.qualitySqlExpr} >= $QualityCut
-         |),
-         |chunks AS (${chunksSqlFrom("good")}),
-         |sel AS (
-         |  SELECT doc_id, chunk_idx, chunk_text, n_tokens,
-         |    row_number() OVER (PARTITION BY md5(chunk_text)
-         |      ORDER BY doc_id, chunk_idx) AS rn
-         |  FROM chunks
-         |)
-         |SELECT doc_id, chunk_idx, chunk_text, n_tokens
-         |FROM sel WHERE rn = 1 ORDER BY doc_id, chunk_idx""".stripMargin,
+         |${goodSql("kept")},
+         |$keepFirstSql""".stripMargin,
     // the full composition with redaction FIRST: the pair CTE runs over
     // the redacted text (cappedJaccardSqlFrom("red")), the quality gate
     // reads the redacted column, and n_pii audits the original-text
     // match counts — every expression spliced from the same constants
     // the engine uses
     "cur_pipeline_full" ->
-      s"""WITH red AS (
-         |  SELECT doc_id, lang,
-         |    ${TextAnalysis.piiCountSqlExpr} AS n_pii,
-         |    ${TextAnalysis.redactedSqlExpr} AS text
-         |  FROM documents
-         |),
-         |pairs AS (${Dedup.cappedJaccardSqlFrom("red")}),
-         |kept AS (
-         |  SELECT doc_id, lang, n_pii, text FROM red
-         |  WHERE doc_id NOT IN (SELECT doc_b FROM pairs)
-         |),
-         |good AS (
-         |  SELECT lang, n_pii, len(string_split(text, ' ')) AS n_tokens FROM kept
-         |  WHERE ${TextAnalysis.qualitySqlExpr} >= $QualityCut
-         |)
-         |SELECT lang, count(*) AS n_docs,
-         |  CAST(sum(ceil(n_tokens::DOUBLE / $ChunkStride)) AS BIGINT) AS n_chunks,
-         |  CAST(sum(n_tokens) AS BIGINT) AS n_tokens,
-         |  CAST(sum(n_pii) AS BIGINT) AS n_pii
-         |FROM good GROUP BY lang ORDER BY lang""".stripMargin,
+      s"""WITH ${redSql("documents", "lang", s"${TextAnalysis.piiCountSqlExpr} AS n_pii")},
+         |${Dedup.pairDropSql("red")},
+         |${goodSql("kept")}
+         |${langSummarySql("n_pii")}""".stripMargin,
     "cur_shuffle_order" ->
       """SELECT doc_id, (doc_id * 1103515245 + 12345) % 2147483648 AS k,
         |  row_number() OVER (ORDER BY (doc_id * 1103515245 + 12345) % 2147483648, doc_id) - 1 AS pos
@@ -3203,19 +3068,9 @@ object Curation {
     // (TextAnalysis.qualitySqlExpr), and the chunk-count arithmetic —
     // spliced from the same constants the engine uses, so no drift
     "cur_pipeline" ->
-      s"""WITH pairs AS (${Dedup.cappedJaccardSql}),
-         |kept AS (
-         |  SELECT doc_id, lang, text FROM documents
-         |  WHERE doc_id NOT IN (SELECT doc_b FROM pairs)
-         |),
-         |good AS (
-         |  SELECT lang, len(string_split(text, ' ')) AS n_tokens FROM kept
-         |  WHERE ${TextAnalysis.qualitySqlExpr} >= $QualityCut
-         |)
-         |SELECT lang, count(*) AS n_docs,
-         |  CAST(sum(ceil(n_tokens::DOUBLE / $ChunkStride)) AS BIGINT) AS n_chunks,
-         |  CAST(sum(n_tokens) AS BIGINT) AS n_tokens
-         |FROM good GROUP BY lang ORDER BY lang""".stripMargin,
+      s"""WITH ${Dedup.pairDropSql("documents")},
+         |${goodSql("kept")}
+         |${langSummarySql()}""".stripMargin,
     // the packBins window formulation over the chunk CTE, in the same
     // (doc_id, chunk_idx) order the engine's range sort uses
     // chunk granularity x subword measure: the greedy-walk CTE keyed

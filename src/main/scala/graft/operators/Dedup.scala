@@ -2562,6 +2562,15 @@ object Dedup {
 
   private[operators] val cappedJaccardSql: String = cappedJaccardSqlFrom("documents")
 
+  /** `pairs` + `kept`: the capped-Jaccard pair search over `src`, and
+    * the rows of `src` that are no pair's doc_b (the pair-drop keep). */
+  private[operators] def pairDropSql(src: String): String =
+    s"""pairs AS (${cappedJaccardSqlFrom(src)}),
+       |kept AS (
+       |  SELECT * FROM $src
+       |  WHERE doc_id NOT IN (SELECT doc_b FROM pairs)
+       |)""".stripMargin
+
   /** Containment oracle: same capped shingle space, overlap relative to
     * the SMALLER side — brute-forced over all co-shingled pairs. Also
     * spliced (as an edge source) into the union-cluster oracle and, via
@@ -2592,42 +2601,45 @@ object Dedup {
 
   private val containmentSql = containmentSqlFrom("documents")
 
-  /** Recursive transitive closure over the capped-Jaccard pair graph —
-    * the `dedup_clusters` oracle, SHARED by `dedup_clusters_incremental`
+  /** `j`, `cq` and their union `p(doc_a, doc_b)`: the Jaccard and the
+    * containment edge sets over `src`, each spliced from its
+    * single-source oracle so the edge definitions cannot drift. */
+  private[operators] def unionPairCtesFrom(src: String): String =
+    s"""j AS (SELECT doc_a, doc_b FROM (${cappedJaccardSqlFrom(src)})),
+       |cq AS (SELECT doc_a, doc_b FROM (${containmentSqlFrom(src)})),
+       |p AS (SELECT doc_a, doc_b FROM j UNION SELECT doc_a, doc_b FROM cq)""".stripMargin
+
+  /** `lab(doc_id, cluster)`: the recursive transitive closure of the
+    * edge CTE `p(doc_a, doc_b)` over the ids of `nodes`, cluster = the
+    * minimum reachable id — the label-propagation fixpoint, algorithm-
+    * independent. Splice under `WITH RECURSIVE`. */
+  private[operators] def closureCtes(nodes: String): String =
+    s"""e AS (SELECT doc_a AS a, doc_b AS b FROM p
+       |      UNION SELECT doc_b, doc_a FROM p),
+       |reach(n, m) AS (
+       |  SELECT doc_id, doc_id FROM $nodes
+       |  UNION
+       |  SELECT e.b, reach.m FROM e JOIN reach ON e.a = reach.n
+       |),
+       |lab AS (SELECT n AS doc_id, min(m) AS cluster FROM reach GROUP BY n)""".stripMargin
+
+  /** The closure over the capped-Jaccard pair graph — the
+    * `dedup_clusters` oracle, SHARED by `dedup_clusters_incremental`
     * (star replacement of the prior components is exact, so maintenance
     * is output-invisible — the sharing is the claim). */
   private val clustersSql =
     s"""WITH RECURSIVE
        |p AS (SELECT doc_a, doc_b FROM ($cappedJaccardSql)),
-       |e AS (SELECT doc_a AS a, doc_b AS b FROM p
-       |      UNION SELECT doc_b, doc_a FROM p),
-       |reach(n, m) AS (
-       |  SELECT doc_id, doc_id FROM documents
-       |  UNION
-       |  SELECT e.b, reach.m FROM e JOIN reach ON e.a = reach.n
-       |)
-       |SELECT n AS doc_id, min(m) AS cluster
-       |FROM reach GROUP BY n ORDER BY doc_id""".stripMargin
+       |${closureCtes("documents")}
+       |SELECT doc_id, cluster FROM lab ORDER BY doc_id""".stripMargin
 
-  /** Recursive transitive closure over the UNION of the Jaccard and
-    * containment edge sets (both CTEs spliced from the single-source
-    * oracles, so the edge definitions cannot drift) — the
-    * `dedup_clusters_all` oracle, also spliced into the cluster-keep
-    * oracle. */
+  /** The closure over the UNION of the Jaccard and containment edge
+    * sets — the `dedup_clusters_all` oracle. */
   private val clustersAllSql =
     s"""WITH RECURSIVE
-       |j AS (SELECT doc_a, doc_b FROM ($cappedJaccardSql)),
-       |cq AS (SELECT doc_a, doc_b FROM ($containmentSql)),
-       |p AS (SELECT doc_a, doc_b FROM j UNION SELECT doc_a, doc_b FROM cq),
-       |e AS (SELECT doc_a AS a, doc_b AS b FROM p
-       |      UNION SELECT doc_b, doc_a FROM p),
-       |reach(n, m) AS (
-       |  SELECT doc_id, doc_id FROM documents
-       |  UNION
-       |  SELECT e.b, reach.m FROM e JOIN reach ON e.a = reach.n
-       |)
-       |SELECT n AS doc_id, min(m) AS cluster
-       |FROM reach GROUP BY n ORDER BY doc_id""".stripMargin
+       |${unionPairCtesFrom("documents")},
+       |${closureCtes("documents")}
+       |SELECT doc_id, cluster FROM lab ORDER BY doc_id""".stripMargin
 
   /** The engine's SimHash bit-vote, mirrored in SQL over a grouped
     * column `h` of UBIGINT feature hashes: fingerprint bit b is set iff
@@ -3013,10 +3025,8 @@ object Dedup {
     // invisible, so it shares the inline query's oracle VERBATIM
     "dedup_minhash_stored" -> minhashIncrementalOracleSql,
     "dedup_kept" ->
-      s"""WITH pairs AS ($cappedJaccardSql)
-         |SELECT doc_id, lang, source FROM documents
-         |WHERE doc_id NOT IN (SELECT doc_b FROM pairs)
-         |ORDER BY doc_id""".stripMargin,
+      s"""WITH ${pairDropSql("documents")}
+         |SELECT doc_id, lang, source FROM kept ORDER BY doc_id""".stripMargin,
     // connected components as a recursive transitive closure over the
     // same capped-Jaccard pair graph the engine clusters — min reachable
     // id per node ≡ the label-propagation fixpoint (both are exactly the

@@ -2591,37 +2591,13 @@ object Streaming {
     // whose exact content the prior snapshot contains (the bootstrapped
     // prior-owned suppression); same single-source redaction/quality/
     // chunk splices, snapshot split mirrored in SQL
-    "stream_pipeline_samples_warmstart" ->
-      s"""WITH red AS (
-         |  SELECT doc_id, ${graft.operators.TextAnalysis.redactedSqlExpr} AS text
-         |  FROM documents
-         |),
-         |redp AS (
-         |  SELECT doc_id, text FROM red
-         |  WHERE doc_id % ${graft.operators.Dedup.SnapshotMod}
-         |    < ${graft.operators.Dedup.SnapshotNewMin}
-         |),
-         |goodf AS (
-         |  SELECT doc_id, text FROM red
-         |  WHERE doc_id % ${graft.operators.Dedup.SnapshotMod}
-         |      >= ${graft.operators.Dedup.SnapshotNewMin}
-         |    AND ${graft.operators.TextAnalysis.qualitySqlExpr}
-         |      >= ${graft.operators.Curation.QualityCut}
-         |),
-         |chunks AS (${graft.operators.Curation.chunksSqlFrom("goodf")}),
-         |pchunks AS (${graft.operators.Curation.chunksSqlFrom("redp")}),
-         |sel AS (
-         |  SELECT doc_id, chunk_idx, chunk_text, n_tokens,
-         |    row_number() OVER (PARTITION BY md5(chunk_text)
-         |      ORDER BY doc_id, chunk_idx) AS rn
-         |  FROM chunks
-         |)
-         |SELECT doc_id, chunk_idx, chunk_text, n_tokens
-         |FROM sel s
-         |WHERE rn = 1
-         |  AND NOT EXISTS (SELECT 1 FROM pchunks p
-         |                  WHERE md5(p.chunk_text) = md5(s.chunk_text))
-         |ORDER BY doc_id, chunk_idx""".stripMargin,
+    "stream_pipeline_samples_warmstart" -> {
+      import graft.operators.Curation.{goodSql, keepFirstNotInSql, redSql, snapshotSplitSql}
+      s"""WITH ${redSql("documents")},
+         |$snapshotSplitSql,
+         |${goodSql("redf")},
+         |${keepFirstNotInSql("redp")}""".stripMargin
+    },
     // the batch decontamination oracle verbatim: stream-static probe +
     // post-hit aggregation must equal the batch overlap filter
     "stream_decontam" -> graft.operators.Curation.oracles("cur_decontam"),
@@ -2700,43 +2676,19 @@ object Streaming {
         |ORDER BY doc_a, doc_b""".stripMargin
 
   /** The streamed stages (redact → quality → chunk → chunk-level
-    * keep-first) as oracle CTEs — shared by the samples oracle and the
-    * shard-assign twin so the stage splices cannot drift. */
-  private lazy val pipelineSamplesCtes: String =
-    s"""red AS (
-       |  SELECT doc_id, ${graft.operators.TextAnalysis.redactedSqlExpr} AS text
-       |  FROM documents
-       |),
-       |good AS (
-       |  SELECT doc_id, text FROM red
-       |  WHERE ${graft.operators.TextAnalysis.qualitySqlExpr} >= ${graft.operators.Curation.QualityCut}
-       |),
-       |chunks AS (${graft.operators.Curation.chunksSqlFrom("good")}),
-       |sel AS (
-       |  SELECT doc_id, chunk_idx, chunk_text, n_tokens,
-       |    row_number() OVER (PARTITION BY md5(chunk_text)
-       |      ORDER BY doc_id, chunk_idx) AS rn
-       |  FROM chunks
-       |)""".stripMargin
-
-  private lazy val pipelineSamplesOracleSql: String =
-    s"""WITH $pipelineSamplesCtes
-       |SELECT doc_id, chunk_idx, chunk_text, n_tokens
-       |FROM sel WHERE rn = 1 ORDER BY doc_id, chunk_idx""".stripMargin
+    * keep-first) as one oracle statement, each stage spliced from the
+    * batch oracles' single definition. */
+  private lazy val pipelineSamplesOracleSql: String = {
+    import graft.operators.Curation.{goodSql, keepFirstSql, redSql}
+    s"""WITH ${redSql("documents")},
+       |${goodSql("red")},
+       |$keepFirstSql""".stripMargin
+  }
 
   /** The shard window over the STREAMED stages' sample set — the exact
     * batch `cur_shard_assign` tail, applied to the stream pipeline's
     * own (near-dup-free, lambda-split) sample set: on a single-batch
     * feed the ingest fold must reproduce it row for row. */
   private lazy val streamShardAssignOracleSql: String =
-    s"""WITH $pipelineSamplesCtes,
-       |samples AS (
-       |  SELECT doc_id, chunk_idx, chunk_text, n_tokens
-       |  FROM sel WHERE rn = 1
-       |)
-       |SELECT doc_id, chunk_idx, chunk_text, n_tokens,
-       |  CAST(coalesce(sum(n_tokens) OVER (ORDER BY doc_id, chunk_idx
-       |    ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-       |    // ${graft.operators.Curation.ShardBudget} AS BIGINT) AS shard
-       |FROM samples ORDER BY doc_id, chunk_idx""".stripMargin
+    graft.operators.Curation.shardAssignSql(pipelineSamplesOracleSql)
 }

@@ -10,7 +10,12 @@ import java.nio.file.{Files, Paths}
   *
   * writes <outDir>/<q>_<suffix>.txt per query. Uses the bench session
   * shape (local[32], shuffle=32, AQE on) at sf0.1 so plans match what
-  * Bench executes.
+  * Bench executes. Expression ids (`#123`), RDD ids (`RDD[45]`),
+  * exchange ids (`plan_id=67`) and lambda variable suffixes (`x_8`) are
+  * masked, since they count up with everything the JVM planned before,
+  * and so are the source lines of an RDD's call site (`Curation.scala:89`),
+  * which move with any edit above them: a `diff` of two snapshots is
+  * empty exactly when the plans match.
   */
 object PlanSnap {
   def main(args: Array[String]): Unit = {
@@ -27,7 +32,7 @@ object PlanSnap {
         val plan = df.queryExecution.explainString(
           org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
         Files.write(outDir.resolve(s"${name}_$suffix.txt"),
-          plan.getBytes(StandardCharsets.UTF_8))
+          mask(plan).getBytes(StandardCharsets.UTF_8))
         println(s"[plansnap] wrote ${name}_$suffix.txt")
       } catch {
         case e: Throwable =>
@@ -36,4 +41,9 @@ object PlanSnap {
     }
     spark.stop()
   }
+
+  private[tools] def mask(plan: String): String =
+    plan.replaceAll("#\\d+", "#N").replaceAll("RDD\\[\\d+\\]", "RDD[N]")
+      .replaceAll("plan_id=\\d+", "plan_id=N").replaceAll("\\.scala:\\d+", ".scala:N")
+      .replaceAll("lambda (\\w+?)_\\d+#", "lambda $1_N#")
 }

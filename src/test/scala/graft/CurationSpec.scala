@@ -140,20 +140,49 @@ class CurationSpec extends AnyFunSuite {
 
   test("samples pipeline null discipline: a null-doc_id row is dropped, not passed through") {
     import spark.implicits._
-    // ADVICE r21: the keep branch filters doc_id.isNotNull explicitly —
-    // a bare LEFT ANTI would KEEP a null-keyed row (null matches
-    // nothing), but such a row is un-keyable downstream (dedup, shard
-    // assignment, joins). Pin the documented discipline: null-id rows
-    // contribute no samples and don't disturb the others.
+    // ADVICE r21: a bare LEFT ANTI would KEEP a null-keyed row (null
+    // matches nothing), but such a row is un-keyable downstream (dedup,
+    // shard assignment, joins). Every samples variant drops it, by an
+    // explicit filter or a semi-join. Each text clears the quality gate,
+    // no two are near-duplicates and no two share a 10-token line (each
+    // starts its stopword cycle elsewhere), so a null row that slipped
+    // through would surface as null-doc_id samples, and docs 1 and 8
+    // both survive. Doc 1 is in the prior snapshot slice and doc 8 in
+    // the fresh one: the incremental and DSIR pipelines emit the fresh
+    // slice only.
     val stop = Seq("the", "a", "an", "and", "or", "of", "to", "in", "is", "it")
     def stops(n: Int, from: Int) = (0 until n).map(i => stop((from + i) % 10))
-    val text = (stops(60, 0) ++ (0 until 40).map(i => s"a$i")).mkString(" ")
-    val docs = Seq((Some(1L), text), (None, text))
-      .toDF("doc_id", "text")
-    val got = Curation.pipelineCurateSamplesOn(docs).collect()
-    assert(got.nonEmpty && got.forall(!_.isNullAt(0)),
-      s"null-doc_id rows must be dropped: ${got.toSeq}")
-    assert(got.map(_.getLong(0)).distinct.toSeq === Seq(1L), s"got ${got.toSeq}")
+    def text(tag: String, from: Int = 0) =
+      (stops(60, from) ++ (0 until 40).map(i => s"$tag$i")).mkString(" ")
+    val docs = Seq((Some(1L), "en", "s1", text("a")), (Some(8L), "en", "s2", text("b", 3)),
+        (None, "en", "s3", text("c", 6)))
+      .toDF("doc_id", "lang", "source", "text")
+    val prior = docs.filter($"doc_id" === 1L).select($"doc_id", $"text")
+    val fresh = docs.filter($"doc_id".isNull || $"doc_id" =!= 1L).select($"doc_id", $"text")
+    val variants: Seq[(String, () => org.apache.spark.sql.DataFrame)] = Seq(
+      "samples" -> (() => Curation.pipelineCurateSamplesOn(docs)),
+      "qm" -> (() => Curation.pipelineCurateSamplesQmOn(docs)),
+      "dsir" -> (() => Curation.pipelineCurateSamplesDsirOn(docs)),
+      "caps" -> (() => Curation.pipelineCurateSamplesCapsOn(docs)),
+      "lines" -> (() => Curation.pipelineCurateSamplesLinesOn(docs)),
+      "c4" -> (() => Curation.pipelineCurateSamplesC4On(docs)),
+      "cc" -> (() => Curation.pipelineCurateSamplesCcOn(docs)),
+      "ccq" -> (() => Curation.pipelineCurateSamplesCcqOn(docs)),
+      "incremental" -> (() => Curation.pipelineCurateSamplesIncrementalOn(prior, fresh)))
+    val got = variants.map { case (name, run) =>
+      val rows = run().collect()
+      assert(rows.forall(!_.isNullAt(0)), s"$name: null-doc_id rows must be dropped: ${rows.toSeq}")
+      name -> rows.map(_.getLong(0)).toSet
+    }.toMap
+    val both = Set(1L, 8L)
+    assert(got === Map("samples" -> both, "qm" -> both, "dsir" -> Set(8L), "caps" -> both,
+      "lines" -> both, "c4" -> both, "cc" -> both, "ccq" -> both, "incremental" -> Set(8L)))
+    // a null row carrying doc 1's exact text is not a duplicate that
+    // costs doc 1 its samples
+    val twin = Seq((Some(1L), text("a")), (None, text("a"))).toDF("doc_id", "text")
+    val ids = Curation.pipelineCurateSamplesOn(twin).collect()
+    assert(ids.forall(!_.isNullAt(0)), s"null-doc_id rows must be dropped: ${ids.toSeq}")
+    assert(ids.map(_.getLong(0)).distinct.toSeq === Seq(1L), s"got ${ids.toSeq}")
   }
 
   test("cluster keep retains one representative per excerpt chain; pair-drop keeps the excerpt") {
