@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FSDataInputStream, Path}
-import org.apache.spark.sql.{DataFrame, Encoders, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftshim.Shim
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
@@ -77,8 +77,8 @@ object WordCount {
   /** Reference CLI contract (`omp.cpp:219-223`, `hybrid.cpp:444-453`):
     * header + `[i] word: count` lines, ascending byte order.
     *
-    * One Spark job with one stage and no shuffle, the reference's own
-    * MapReduce shape:
+    * One `SparkContext` job, tagged [[JobTag]], with one stage and no
+    * shuffle, the reference's own MapReduce shape (no job for empty input):
     *  - read+map: the driver cuts the files, laid end to end, into
     *    min(cores, ⌈total / 1 MB⌉) tasks of equal bytes ([[plan]]). Each
     *    task reads its byte ranges raw through Hadoop `FileSystem`, as
@@ -95,9 +95,8 @@ object WordCount {
     * serve), read with the session's Hadoop configuration.
     * Driver bound: it receives Σ per-task vocabulary, at most cores ×
     * vocabulary words; the output itself already needs the whole
-    * vocabulary on the driver (SURVEY.md §7.5's parity cost). The op is
-    * a typed Dataset action, not an RDD one, so it raises SQL-execution
-    * events (plan and confs capturable) like every other query. */
+    * vocabulary on the driver (SURVEY.md §7.5's parity cost). No
+    * relational operator, so no Catalyst plan and no SQL execution. */
   def formattedBytes(spark: SparkSession, paths: Seq[String],
       headerLabel: String, includeUnique: Boolean): Array[Byte] =
     formattedBytesInner(spark, paths, headerLabel, includeUnique, TaskBytes)
@@ -110,27 +109,28 @@ object WordCount {
   /** A task's read buffer; it grows only to hold a longer token. */
   private final val BufBytes = 1 << 20
 
-  /** [[formattedBytes]] with tasks of at least `taskBytes` (the seam
-    * the split tests drive). */
+  /** The tag listeners key [[formattedBytes]]'s job by. */
+  private[graft] final val JobTag = "graft-word-count"
+
+  /** [[formattedBytes]] with tasks of at least `taskBytes` (the split tests' seam). */
   private[graft] def formattedBytesInner(spark: SparkSession, paths: Seq[String],
       headerLabel: String, includeUnique: Boolean, taskBytes: Long): Array[Byte] = {
     val hadoopConf = Shim.hadoopConf(spark)
     val files = inputFiles(hadoopConf, paths)
-    val total = files.map(_._2).sum
-    val tasks = math.min(spark.sparkContext.defaultParallelism.toLong,
-      (total - 1).max(0L) / taskBytes + 1).toInt
-    val ranges = plan(files, tasks)
-    // broadcast, as Spark's file sources ship it: a copy in the closure
-    // would be deserialized by every task (~0.1 MB, ~20 ms each)
-    val conf = spark.sparkContext.broadcast(new SerializableConfiguration(hadoopConf))
-    // one row per task, and so one task per row (a local relation gets
-    // min(rows, cores) partitions); the rows are indices into `ranges`
-    val partials = try spark.createDataset(ranges.indices)(Encoders.scalaInt)
-      .mapPartitions((ts: Iterator[Int]) =>
-        ts.map(t => countRanges(ranges(t), conf.value.value, BufBytes)))(
-        Encoders.product[WordCounts])
-      .collect()
-    finally conf.destroy()
+    val sc = spark.sparkContext
+    val ranges = plan(files, math.min(sc.defaultParallelism.toLong,
+      (files.map(_._2).sum - 1).max(0L) / taskBytes + 1).toInt)
+    val partials = if (ranges.isEmpty) Seq.empty else {
+      // broadcast, as file sources ship it: each task would read a closure copy (~20 ms)
+      val conf = sc.broadcast(new SerializableConfiguration(hadoopConf))
+      // restored as they were: removeJobTag re-joins the caller's tags, maybe reordered
+      val props = Seq("spark.job.tags", "spark.job.description").map(k => k -> sc.getLocalProperty(k))
+      sc.addJobTag(JobTag)
+      sc.setJobDescription(s"word count: $headerLabel")
+      try sc.parallelize(ranges, ranges.length) // one task per range list
+        .map(countRanges(_, conf.value.value, BufBytes)).collect().toSeq
+      finally { conf.destroy(); props.foreach { case (k, v) => sc.setLocalProperty(k, v) } }
+    }
     formatted(partials, headerLabel, includeUnique)
   }
 
@@ -245,7 +245,7 @@ object WordCount {
     partials.foreach(all.merge)
     val header = (s"Filename: $headerLabel, total words: ${all.total}\n" +
       (if (includeUnique) s"Unique words found: ${all.size}\n" else ""))
-      .getBytes(java.nio.charset.StandardCharsets.US_ASCII)
+      .getBytes(java.nio.charset.StandardCharsets.UTF_8)
     formatLines(header, all.sorted)
   }
 

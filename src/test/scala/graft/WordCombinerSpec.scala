@@ -3,6 +3,8 @@ package graft
 import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.Files
 
+import org.apache.spark.graftshim.{ListenerShim, TestShim}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, Encoders}
 import org.apache.spark.sql.functions.col
 import org.scalacheck.{Gen, Prop, Test => SCTest}
@@ -258,6 +260,67 @@ class WordCombinerSpec extends AnyFunSuite {
         val e = intercept[IllegalArgumentException](
           WordCount.formattedBytes(spark, paths :+ bad, "in/part00.txt", includeUnique = false))
         assert(e.getMessage.contains(bad) && e.getMessage.contains(why), e.getMessage)
+      }
+    }
+  }
+
+  test("exact output: a non-ASCII label as its UTF-8 bytes; header only when every input is empty") {
+    // the reference prints argv's bytes: é is C3 A9 under a UTF-8 locale
+    val labelBytes = "raw_text_input/".getBytes(UTF_8) ++ Array(0xc3, 0xa9).map(_.toByte) ++
+      ".txt".getBytes(UTF_8)
+    val label = new String(labelBytes, UTF_8)
+    def expected(body: String) =
+      "Filename: ".getBytes(UTF_8) ++ labelBytes ++ body.getBytes(UTF_8)
+    withFiles(Seq("a b\n".getBytes(UTF_8), "a\n".getBytes(UTF_8))) { paths =>
+      val got = WordCount.formattedBytes(spark, paths, label, includeUnique = true)
+      assert(got.toSeq === expected(", total words: 3\nUnique words found: 2\n[0] a: 2\n[1] b: 1\n").toSeq)
+    }
+    // every input empty: no range, so no job, and the header alone
+    for (n <- Seq(1, 3)) withFiles(Seq.fill(n)(Array.emptyByteArray)) { paths =>
+      val got = WordCount.formattedBytes(spark, paths, label, includeUnique = true)
+      assert(got.toSeq === expected(", total words: 0\nUnique words found: 0\n").toSeq, s"$n empty files")
+    }
+  }
+
+  test("one job of one stage, one task per planned range list, under the word count's tag; " +
+      "none for empty input; the caller's local properties are unchanged, also after a failing call") {
+    val sc = spark.sparkContext
+    val caller = s"graft-caller-${System.nanoTime()}"
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[SparkListenerJobStart]
+    def tags(e: SparkListenerJobStart): Set[String] =
+      Option(e.properties).flatMap(p => Option(p.getProperty("spark.job.tags")))
+        .fold(Set.empty[String])(_.split(",").toSet)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (tags(e).contains(caller)) jobs.add(e)
+    }
+    withFiles(Seq("a b\n".getBytes(UTF_8), "c d a\n".getBytes(UTF_8), Array.emptyByteArray)) { paths =>
+      val lengths = paths.map(p => p -> Files.size(java.nio.file.Paths.get(p)))
+      sc.addJobTag(caller)
+      sc.setJobDescription("the caller's job")
+      sc.addSparkListener(listener)
+      try {
+        val before = TestShim.localProperties(sc)
+        WordCount.formattedBytesInner(spark, paths, "in/part00.txt", includeUnique = true,
+          taskBytes = 4)
+        assert(TestShim.localProperties(sc) === before)
+        WordCount.formattedBytes(spark, Seq(paths.last), "in/part02.txt", includeUnique = true)
+        assert(TestShim.localProperties(sc) === before)
+        intercept[IllegalArgumentException](WordCount.formattedBytes(spark,
+          paths :+ (paths.head + ".missing"), "in/part00.txt", includeUnique = true))
+        assert(TestShim.localProperties(sc) === before)
+        ListenerShim.drain(sc)
+        assert(jobs.size === 1, "jobs started by the word count")
+        val job = jobs.peek
+        assert(tags(job) === Set(caller, WordCount.JobTag))
+        assert(job.properties.getProperty("spark.job.description") === "word count: in/part00.txt")
+        assert(job.stageInfos.size === 1)
+        assert(WordCount.plan(lengths, 3).size === 3)
+        assert(job.stageInfos.head.numTasks === 3)
+      } finally {
+        sc.removeSparkListener(listener)
+        sc.removeJobTag(caller)
+        sc.setJobDescription(null)
       }
     }
   }

@@ -10,4 +10,11 @@ import org.apache.spark.SparkContext
 object TestShim {
   def clearCheckpointDir(sc: SparkContext): Unit =
     sc.checkpointDir = None
+
+  /** A copy of the calling thread's local properties (job tags,
+    * description, …), which SparkContext reads one key at a time only. */
+  def localProperties(sc: SparkContext): Map[String, String] = {
+    val p = sc.getLocalProperties
+    p.stringPropertyNames.toArray(Array.empty[String]).map(k => k -> p.getProperty(k)).toMap
+  }
 }
