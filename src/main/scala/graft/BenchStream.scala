@@ -3,7 +3,6 @@ package graft
 import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions._
 
 /** Honest ingest-tier benchmark: the flagship streaming samples pipeline
   * (`stream_pipeline_samples_ttl`'s transform) run file-source →
@@ -46,14 +45,8 @@ object BenchStream {
     // bootstraps the state (initialState), ONLY the delta streams —
     // the per-ingest steady state a re-deployed pipeline runs; its
     // docs/s is over the delta (the work actually done per crawl)
-    import spark.implicits._
     val deltaSrc = s"$work/delta"
-    val priorDocs = staged.filter(
-      pmod($"doc_id", lit(graft.operators.Dedup.SnapshotMod))
-        < graft.operators.Dedup.SnapshotNewMin)
-    val deltaDocs = staged.filter(
-      pmod($"doc_id", lit(graft.operators.Dedup.SnapshotMod))
-        >= graft.operators.Dedup.SnapshotNewMin)
+    val (priorDocs, deltaDocs) = graft.operators.Dedup.snapshotSplit(staged, "doc_id")
     val nDelta = deltaDocs.count()
     deltaDocs.repartition(Batches).write.mode("overwrite").parquet(deltaSrc)
     runWarmstart(spark, deltaSrc, priorDocs, s"$work/ws_warm") // warm-up
@@ -87,13 +80,12 @@ object BenchStream {
   private def runWarmstart(spark: SparkSession, deltaSrc: String,
       prior: org.apache.spark.sql.DataFrame, out: String): Run = {
     import spark.implicits._
-    def withTs(df: org.apache.spark.sql.DataFrame) = df.withColumn("ts",
-      timestamp_seconds(lit(1700000000L) + pmod($"doc_id", lit(3600))))
+    import graft.streaming.Streaming.withInWindowTs
     val schema = spark.read.parquet(deltaSrc).schema
-    val docs = withTs(spark.readStream.schema(schema)
+    val docs = withInWindowTs(spark.readStream.schema(schema)
       .option("maxFilesPerTrigger", "1").parquet(deltaSrc))
     val emissions = graft.streaming.Streaming
-      .pipelineSamplesWarmstartTTLTransform(docs, withTs(prior), "1 hour")
+      .pipelineSamplesWarmstartTTLTransform(docs, withInWindowTs(prior), "1 hour")
     val t0 = System.nanoTime()
     val q = emissions.writeStream
       .outputMode("append")
@@ -125,11 +117,9 @@ object BenchStream {
     // same synthetic in-window timestamps as the correctness harness
     // (streamPipelineSamplesTTL): every ts inside the TTL window, so the
     // run measures the keep path, not eviction churn
-    val docs = spark.readStream.schema(schema)
+    val docs = graft.streaming.Streaming.withInWindowTs(spark.readStream.schema(schema)
       .option("maxFilesPerTrigger", "1")
-      .parquet(src)
-      .withColumn("ts",
-        timestamp_seconds(lit(1700000000L) + pmod($"doc_id", lit(3600))))
+      .parquet(src))
     val emissions =
       graft.streaming.Streaming.pipelineSamplesTTLTransform(docs, "1 hour")
     val t0 = System.nanoTime()

@@ -520,8 +520,7 @@ object Curation {
     // redact projection, and the repartition AFTER it spreads the
     // 1/5-sized slice (and its redact + gram fan-out) across cores —
     // the textQualityModel seam, minus that query's round-robin.
-    val fitIn = docs
-      .filter(pmod($"doc_id", lit(Dedup.SnapshotMod)) < Dedup.SnapshotNewMin)
+    val fitIn = docs.filter(Dedup.isPrior($"doc_id"))
       .repartition(width, $"doc_id")
       .select($"doc_id", TextAnalysis.redactedCol($"text").as("text"))
     // pair search ∥ model fit: independent artifacts, overlapped
@@ -575,13 +574,10 @@ object Curation {
     // (pruning + pushdown preserved), only the two artifacts below
     // materialize.
     val raw = docs.repartition(width, $"doc_id").select($"doc_id", $"text")
-    val target = docs
-      .filter(pmod($"doc_id", lit(Dedup.SnapshotMod)) < Dedup.SnapshotNewMin &&
-        $"lang" === "en")
+    val target = docs.filter(Dedup.isPrior($"doc_id") && $"lang" === "en")
       .repartition(width, $"doc_id")
       .select($"text")
-    val fresh = raw
-      .filter(pmod($"doc_id", lit(Dedup.SnapshotMod)) >= Dedup.SnapshotNewMin)
+    val fresh = raw.filter(Dedup.isFresh($"doc_id"))
     // pair search ∥ the COMPLETE importance-weight computation: the
     // background model is the raw fresh slice (pre-dedup — the paper's
     // raw distribution), so the weights frame needs no drop input and
@@ -848,11 +844,8 @@ object Curation {
     * twin (prior copy or keep-first witness) carries the identical
     * shingle set into the search. */
   def pipelineCurateSamplesIncremental(spark: SparkSession, sfDir: String): DataFrame = {
-    import spark.implicits._
-    val docs = Tables.documents(spark, sfDir)
-    pipelineCurateSamplesIncrementalOn(
-      docs.filter(pmod($"doc_id", lit(Dedup.SnapshotMod)) < Dedup.SnapshotNewMin),
-      docs.filter(pmod($"doc_id", lit(Dedup.SnapshotMod)) >= Dedup.SnapshotNewMin))
+    val (prior, fresh) = Dedup.snapshotSplit(Tables.documents(spark, sfDir), "doc_id")
+    pipelineCurateSamplesIncrementalOn(prior, fresh)
   }
 
   /** The transform of [[pipelineCurateSamplesIncremental]] over any
@@ -1255,6 +1248,21 @@ object Curation {
   final val EvalSliceMod = 10
   final val EvalSliceRem = 7
 
+  /** The one definition of that slice, as engine Column predicates
+    * (`pmod(id, 10) === 7` / `=!= 7`) and oracle DuckDB fragments
+    * (`id % 10 = 7` / `<> 7`). A null id falls in neither. Like
+    * [[Dedup.isPrior]], the spellings agree only for ids ≥ 0
+    * (`pmod(-3, 10) = 7` is eval, DuckDB's `-3 % 10 = -3` is train);
+    * every split table in the testdata has min id 0. */
+  private[graft] def isEval(id: Column): Column = pmod(id, lit(EvalSliceMod)) === EvalSliceRem
+  private[graft] def isTrain(id: Column): Column = pmod(id, lit(EvalSliceMod)) =!= EvalSliceRem
+  private[graft] def evalSql(id: String): String = s"$id % $EvalSliceMod = $EvalSliceRem"
+  private[graft] def trainSql(id: String): String = s"$id % $EvalSliceMod <> $EvalSliceRem"
+
+  /** `(train, eval)` slices of `df` by its `idCol`. */
+  private[graft] def evalSplit(df: DataFrame, idCol: String): (DataFrame, DataFrame) =
+    (df.filter(isTrain(col(idCol))), df.filter(isEval(col(idCol))))
+
   /** Benchmark DECONTAMINATION: flag every training document sharing at
     * least one [[DecontamGram]]-token window with the eval set — the
     * overlap filter every published LLM training pipeline runs before
@@ -1272,11 +1280,8 @@ object Curation {
     * repartitioning. ONE corpus-sized exchange total (the pre-expansion
     * spread), same as every other gram pipeline here. */
   def decontaminate(spark: SparkSession, sfDir: String): DataFrame = {
-    import spark.implicits._
-    val docs = Tables.documents(spark, sfDir)
-    decontaminateOn(
-      docs.filter(pmod($"doc_id", lit(EvalSliceMod)) =!= EvalSliceRem),
-      docs.filter(pmod($"doc_id", lit(EvalSliceMod)) === EvalSliceRem))
+    val (train, eval) = evalSplit(Tables.documents(spark, sfDir), "doc_id")
+    decontaminateOn(train, eval)
   }
 
   /** The decontamination transform over any (train, eval) pair of
@@ -1314,11 +1319,8 @@ object Curation {
     * one raw IEEE division of exact integers (the repetition-signals
     * discipline). */
   def textNovelty(spark: SparkSession, sfDir: String): DataFrame = {
-    import spark.implicits._
-    val docs = Tables.documents(spark, sfDir)
-    noveltyOn(
-      docs.filter(pmod($"doc_id", lit(Dedup.SnapshotMod)) < Dedup.SnapshotNewMin),
-      docs.filter(pmod($"doc_id", lit(Dedup.SnapshotMod)) >= Dedup.SnapshotNewMin))
+    val (prior, fresh) = Dedup.snapshotSplit(Tables.documents(spark, sfDir), "doc_id")
+    noveltyOn(prior, fresh)
   }
 
   /** Distinct-gram expansion for the novelty family — the ONE gram
@@ -1382,17 +1384,13 @@ object Curation {
   def textNoveltyStored(spark: SparkSession, sfDir: String): DataFrame = {
     import graft.sources.IndexStore
     import spark.implicits._
-    val docs = Tables.documents(spark, sfDir)
+    val (prior, fresh) = Dedup.snapshotSplit(Tables.documents(spark, sfDir), "doc_id")
     val priorIdx = IndexStore.readOrBuild(spark,
       IndexStore.artifactPath(spark, sfDir, "novelty_grams", "documents",
-        Seq(DecontamGram, Dedup.SnapshotMod, Dedup.SnapshotNewMin)),
-      noveltyGrams(
-        docs.filter(pmod($"doc_id", lit(Dedup.SnapshotMod)) < Dedup.SnapshotNewMin))
-        .select(explode($"g").as("h")).distinct())
+        Seq(DecontamGram) ++ Dedup.SnapshotKey),
+      noveltyGrams(prior).select(explode($"g").as("h")).distinct())
       .select($"h", lit(1).as("hit"))
-    noveltyTail(noveltyPerDocAgg(
-      docs.filter(pmod($"doc_id", lit(Dedup.SnapshotMod)) >= Dedup.SnapshotNewMin),
-      priorIdx))
+    noveltyTail(noveltyPerDocAgg(fresh, priorIdx))
   }
 
   /** Decontamination STRIP — [[decontaminate]] upgraded from flagging
@@ -1410,11 +1408,8 @@ object Curation {
     * decontaminate plan plus the exact-substring strip tail, no new
     * exchange class. */
   def decontamStrip(spark: SparkSession, sfDir: String): DataFrame = {
-    import spark.implicits._
-    val docs = Tables.documents(spark, sfDir)
-    decontamStripOn(
-      docs.filter(pmod($"doc_id", lit(EvalSliceMod)) =!= EvalSliceRem),
-      docs.filter(pmod($"doc_id", lit(EvalSliceMod)) === EvalSliceRem))
+    val (train, eval) = evalSplit(Tables.documents(spark, sfDir), "doc_id")
+    decontamStripOn(train, eval)
   }
 
   /** The transform over any (train, eval) pair of (doc_id, text)
@@ -1748,11 +1743,8 @@ object Curation {
     * top-k — the [[decontaminate]] plan with dot products in place of
     * gram probes. */
   def decontamSemantic(spark: SparkSession, sfDir: String): DataFrame = {
-    import spark.implicits._
-    val e = Tables.embeddings(spark, sfDir)
-    decontamSemanticOn(
-      e.filter(pmod($"vec_id", lit(EvalSliceMod)) =!= EvalSliceRem),
-      e.filter(pmod($"vec_id", lit(EvalSliceMod)) === EvalSliceRem))
+    val (train, eval) = evalSplit(Tables.embeddings(spark, sfDir), "vec_id")
+    decontamSemanticOn(train, eval)
   }
 
   private[graft] def decontamSemanticOn(train: DataFrame, eval: DataFrame): DataFrame =
@@ -1840,10 +1832,9 @@ object Curation {
     val e = Similarity.embeddings(spark, sfDir)
     val cents = Similarity.seedCentroids(e)
     val scoreArr = Similarity.cosineScores(cents)
-    val train = Similarity.assignedCells(
-        e.filter(pmod($"vec_id", lit(EvalSliceMod)) =!= EvalSliceRem), scoreArr)
+    val train = Similarity.assignedCells(e.filter(isTrain($"vec_id")), scoreArr)
       .select($"vec_id".as("train_id"), $"v".as("tv"), $"cell")
-    val evalProbes = e.filter(pmod($"vec_id", lit(EvalSliceMod)) === EvalSliceRem)
+    val evalProbes = e.filter(isEval($"vec_id"))
       .select($"vec_id".as("eval_id"), $"v".as("ev"),
         explode(Similarity.probeCellsExpr(scoreArr, nprobe)).as("cell"))
     // cells are disjoint per train vector and probe cells are distinct
@@ -1997,9 +1988,8 @@ object Curation {
     val docs = Tables.documents(spark, sfDir)
       .repartition(spark.sparkContext.defaultParallelism)
     dsirWeightsOn(
-      docs.filter(pmod($"doc_id", lit(Dedup.SnapshotMod)) < Dedup.SnapshotNewMin &&
-        $"lang" === "en"),
-      docs.filter(pmod($"doc_id", lit(Dedup.SnapshotMod)) >= Dedup.SnapshotNewMin))
+      docs.filter(Dedup.isPrior($"doc_id") && $"lang" === "en"),
+      docs.filter(Dedup.isFresh($"doc_id")))
       .orderBy($"doc_id") // the public query's documented order (the
       // weights core itself no longer sorts — see dsirWeightsFromRdf)
   }
@@ -2266,9 +2256,9 @@ object Curation {
        |  FROM toks WHERE len(t) >= $DecontamGram
        |),
        |pr AS (SELECT DISTINCT unnest(g) AS h FROM grams
-       |       WHERE doc_id % ${Dedup.SnapshotMod} < ${Dedup.SnapshotNewMin}),
+       |       WHERE ${Dedup.priorSql("doc_id")}),
        |fr AS (SELECT doc_id, len(g) AS n_grams, unnest(g) AS h
-       |       FROM grams WHERE doc_id % ${Dedup.SnapshotMod} >= ${Dedup.SnapshotNewMin}),
+       |       FROM grams WHERE ${Dedup.freshSql("doc_id")}),
        |j AS (
        |  SELECT fr.doc_id, max(fr.n_grams) AS n_grams,
        |    CAST(sum(CASE WHEN pr.h IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_novel
@@ -2312,9 +2302,9 @@ object Curation {
   /** `redp` / `redf`: the prior and the fresh snapshot slices of `red`. */
   private[graft] val snapshotSplitSql: String =
     s"""redp AS (SELECT doc_id, text FROM red
-       |         WHERE doc_id % ${Dedup.SnapshotMod} < ${Dedup.SnapshotNewMin}),
+       |         WHERE ${Dedup.priorSql("doc_id")}),
        |redf AS (SELECT doc_id, text FROM red
-       |         WHERE doc_id % ${Dedup.SnapshotMod} >= ${Dedup.SnapshotNewMin})""".stripMargin
+       |         WHERE ${Dedup.freshSql("doc_id")})""".stripMargin
 
   /** `chunks` + `sel`: the chunk fan-out of `good(doc_id, text)`, each
     * chunk ranked among the chunks of the same content hash by
@@ -2410,8 +2400,8 @@ object Curation {
     * integer gram counts, the single rounded IEEE division onto the
     * 2⁻²⁰ grid, integer difference-sum. */
   private def dsirWeightCtes: String = dsirWeightCtesFrom(
-    s"documents WHERE doc_id % ${Dedup.SnapshotMod} < ${Dedup.SnapshotNewMin} AND lang = 'en'",
-    s"documents WHERE doc_id % ${Dedup.SnapshotMod} >= ${Dedup.SnapshotNewMin}")
+    s"documents WHERE ${Dedup.priorSql("doc_id")} AND lang = 'en'",
+    s"documents WHERE ${Dedup.freshSql("doc_id")}")
 
   /** The parameterized form: `targetSrc` any relation with a `text`
     * column, `rawSrc` any relation with `(doc_id, text)` — the seam
@@ -2623,8 +2613,8 @@ object Curation {
     "cur_pipeline_samples_dsir" ->
       s"""WITH pairs AS (${Dedup.cappedJaccardSqlFrom("documents")}),
          |${dsirWeightCtesFrom(
-             s"(SELECT text FROM documents WHERE doc_id % ${Dedup.SnapshotMod} < ${Dedup.SnapshotNewMin} AND lang = 'en')",
-             s"(SELECT doc_id, text FROM documents WHERE doc_id % ${Dedup.SnapshotMod} >= ${Dedup.SnapshotNewMin})")},
+             s"(SELECT text FROM documents WHERE ${Dedup.priorSql("doc_id")} AND lang = 'en')",
+             s"(SELECT doc_id, text FROM documents WHERE ${Dedup.freshSql("doc_id")})")},
          |wk AS (
          |  SELECT doc_id, weight FROM dsir_w
          |  WHERE doc_id NOT IN (SELECT doc_b FROM pairs)
@@ -2738,8 +2728,8 @@ object Curation {
          |    (sqrt(list_dot_product(t.embedding::DOUBLE[], t.embedding::DOUBLE[])) *
          |     sqrt(list_dot_product(e.embedding::DOUBLE[], e.embedding::DOUBLE[]))), 4) AS cosine
          |FROM embeddings t, embeddings e
-         |WHERE t.vec_id % $EvalSliceMod != $EvalSliceRem
-         |  AND e.vec_id % $EvalSliceMod = $EvalSliceRem
+         |WHERE ${trainSql("t.vec_id")}
+         |  AND ${evalSql("e.vec_id")}
          |ORDER BY list_dot_product(t.embedding::DOUBLE[], e.embedding::DOUBLE[]) /
          |    (sqrt(list_dot_product(t.embedding::DOUBLE[], t.embedding::DOUBLE[])) *
          |     sqrt(list_dot_product(e.embedding::DOUBLE[], e.embedding::DOUBLE[]))) DESC,
@@ -2769,10 +2759,10 @@ object Curation {
          |cand AS (
          |  SELECT a.vec_id AS train_id, p.vec_id AS eval_id
          |  FROM (SELECT vec_id, cid AS cell FROM rk
-         |        WHERE rn = 1 AND vec_id % $EvalSliceMod <> $EvalSliceRem) a
+         |        WHERE rn = 1 AND ${trainSql("vec_id")}) a
          |  JOIN (SELECT vec_id, cid AS cell FROM rk
          |        WHERE rn <= ${Similarity.NProbe}
-         |          AND vec_id % $EvalSliceMod = $EvalSliceRem) p
+         |          AND ${evalSql("vec_id")}) p
          |    USING (cell)
          |)
          |SELECT train_id, eval_id, round(cos, 4) AS cosine FROM (
@@ -2796,7 +2786,7 @@ object Curation {
          |  SELECT DISTINCT array_to_string(t[i : i + ${DecontamGram - 1}], ' ') AS g
          |  FROM (SELECT unnest(range(1, len(t) - ${DecontamGram - 2})) AS i, t
          |        FROM toks
-         |        WHERE doc_id % $EvalSliceMod = $EvalSliceRem
+         |        WHERE ${evalSql("doc_id")}
          |          AND len(t) >= $DecontamGram)
          |),
          |tg AS (
@@ -2804,7 +2794,7 @@ object Curation {
          |    array_to_string(t[i : i + ${DecontamGram - 1}], ' ') AS g
          |  FROM (SELECT doc_id, unnest(range(1, len(t) - ${DecontamGram - 2})) AS i, t
          |        FROM toks
-         |        WHERE doc_id % $EvalSliceMod <> $EvalSliceRem
+         |        WHERE ${trainSql("doc_id")}
          |          AND len(t) >= $DecontamGram)
          |),
          |shared AS (SELECT doc_id, pos FROM tg JOIN eg USING (g)),
@@ -2828,7 +2818,7 @@ object Curation {
          |  SELECT doc_id,
          |    generate_subscripts(string_split(text, ' '), 1) - 1 AS idx,
          |    unnest(string_split(text, ' ')) AS w
-         |  FROM documents WHERE doc_id % $EvalSliceMod <> $EvalSliceRem
+         |  FROM documents WHERE ${trainSql("doc_id")}
          |),
          |keptt AS (
          |  SELECT tk.doc_id, tk.idx, tk.w FROM tk
@@ -2841,7 +2831,7 @@ object Curation {
          |  FROM keptt GROUP BY doc_id
          |),
          |alln AS (SELECT doc_id, len(string_split(text, ' ')) AS n_total
-         |         FROM documents WHERE doc_id % $EvalSliceMod <> $EvalSliceRem)
+         |         FROM documents WHERE ${trainSql("doc_id")})
          |SELECT a.doc_id, coalesce(k.kept_text, '') AS kept_text,
          |  coalesce(k.n_kept, 0) AS n_kept,
          |  a.n_total - coalesce(k.n_kept, 0) AS n_dropped
@@ -2865,9 +2855,9 @@ object Curation {
          |  FROM toks WHERE len(t) >= $DecontamGram
          |),
          |ev AS (SELECT DISTINCT unnest(g) AS h FROM grams
-         |       WHERE doc_id % $EvalSliceMod = $EvalSliceRem),
+         |       WHERE ${evalSql("doc_id")}),
          |tr AS (SELECT doc_id, len(g) AS n_grams, unnest(g) AS h
-         |       FROM grams WHERE doc_id % $EvalSliceMod <> $EvalSliceRem)
+         |       FROM grams WHERE ${trainSql("doc_id")})
          |SELECT tr.doc_id, max(tr.n_grams) AS n_grams, count(*) AS n_hit
          |FROM tr JOIN ev USING (h)
          |GROUP BY tr.doc_id ORDER BY doc_id""".stripMargin,
@@ -2922,7 +2912,7 @@ object Curation {
       s"""WITH ${redSql("documents")},
          |${Dedup.pairDropSql("red")},
          |${TextAnalysis.qmScoreCtes(
-             s"(SELECT text FROM red WHERE doc_id % ${Dedup.SnapshotMod} < ${Dedup.SnapshotNewMin})",
+             s"(SELECT text FROM red WHERE ${Dedup.priorSql("doc_id")})",
              "kept")},
          |good AS (
          |  SELECT kept.doc_id, kept.text FROM kept
@@ -2981,8 +2971,8 @@ object Curation {
          |common AS (
          |  SELECT a.doc_id ai, b.doc_id bi, count(*) c
          |  FROM shg a JOIN shg b ON a.s = b.s
-         |  WHERE b.doc_id % ${Dedup.SnapshotMod} >= ${Dedup.SnapshotNewMin}
-         |    AND (a.doc_id % ${Dedup.SnapshotMod} < ${Dedup.SnapshotNewMin}
+         |  WHERE ${Dedup.freshSql("b.doc_id")}
+         |    AND (${Dedup.priorSql("a.doc_id")}
          |         OR a.doc_id < b.doc_id)
          |  GROUP BY a.doc_id, b.doc_id
          |),

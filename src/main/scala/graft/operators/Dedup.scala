@@ -168,11 +168,8 @@ object Dedup {
     * |delta tokens| × (index probe + window), independent of corpus
     * size; the prior never re-flags itself. */
   def dedupSubstringIncremental(spark: SparkSession, sfDir: String): DataFrame = {
-    import spark.implicits._
-    val docs = Tables.documents(spark, sfDir)
-    dedupSubstringIncrementalOn(
-      docs.filter(pmod($"doc_id", lit(SnapshotMod)) < SnapshotNewMin),
-      docs.filter(pmod($"doc_id", lit(SnapshotMod)) >= SnapshotNewMin))
+    val (prior, fresh) = snapshotSplit(Tables.documents(spark, sfDir), "doc_id")
+    dedupSubstringIncrementalOn(prior, fresh)
   }
 
   /** The transform over any (prior, fresh) pair of (doc_id, text)
@@ -229,15 +226,12 @@ object Dedup {
   def dedupSubstringStored(spark: SparkSession, sfDir: String): DataFrame = {
     import graft.sources.IndexStore
     import spark.implicits._
-    val docs = Tables.documents(spark, sfDir)
+    val (prior, fresh) = snapshotSplit(Tables.documents(spark, sfDir), "doc_id")
     val priorIdx = IndexStore.readOrBuild(spark,
       IndexStore.artifactPath(spark, sfDir, "substr_grams", "documents",
-        Seq(ExactSubstrTokens, SnapshotMod, SnapshotNewMin)),
-      substringGrams(
-        docs.filter(pmod($"doc_id", lit(SnapshotMod)) < SnapshotNewMin))
-        .select($"h").distinct())
-    substringIncrementalTail(priorIdx,
-      docs.filter(pmod($"doc_id", lit(SnapshotMod)) >= SnapshotNewMin))
+        Seq(ExactSubstrTokens) ++ SnapshotKey),
+      substringGrams(prior).select($"h").distinct())
+    substringIncrementalTail(priorIdx, fresh)
   }
 
   /** The ExactSubstr DROP applied — the deduplicated corpus the span
@@ -397,6 +391,30 @@ object Dedup {
   final val SnapshotMod = 10
   final val SnapshotNewMin = 8
 
+  /** The one definition of that split, in its two spellings: the engine's
+    * Column predicates (`pmod(id, 10) < 8` / `>= 8`) and the oracle's
+    * DuckDB fragments (`id % 10 < 8` / `>= 8`). A null id falls in
+    * neither slice. The two spellings agree only for ids ≥ 0: below
+    * zero `pmod(-3, 10) = 7` but `-3 % 10 = -3`, so e.g. id -1 is fresh
+    * in the engine (`pmod = 9`) and prior in the oracle. Every split
+    * table in the testdata (sf0.001 / 0.01 / 0.1, `documents.doc_id`
+    * and `embeddings.vec_id`) has min id 0. The SQL forms read only the
+    * two constants, so the oracle `val`s of other objects (TextAnalysis,
+    * Similarity, Curation) can call them while `Dedup` itself is still
+    * being initialized (`Dedup`'s own oracles call into TextAnalysis). */
+  private[graft] def isPrior(id: Column): Column = pmod(id, lit(SnapshotMod)) < SnapshotNewMin
+  private[graft] def isFresh(id: Column): Column = pmod(id, lit(SnapshotMod)) >= SnapshotNewMin
+  private[graft] def priorSql(id: String): String = s"$id % $SnapshotMod < $SnapshotNewMin"
+  private[graft] def freshSql(id: String): String = s"$id % $SnapshotMod >= $SnapshotNewMin"
+
+  /** `(prior, fresh)` slices of `df` by its `idCol`. */
+  private[graft] def snapshotSplit(df: DataFrame, idCol: String): (DataFrame, DataFrame) =
+    (df.filter(isPrior(col(idCol))), df.filter(isFresh(col(idCol))))
+
+  /** The split's constants, appended last to every stored artifact's
+    * `IndexStore.artifactPath` params: a changed split is a new artifact. */
+  private[graft] val SnapshotKey: Seq[Any] = Seq(SnapshotMod, SnapshotNewMin)
+
   /** INCREMENTAL exact dedup — the daily-crawl update path: a fresh
     * batch is deduplicated internally (keep-min per content hash) and
     * against the PRIOR corpus snapshot's content-hash index, emitting
@@ -407,11 +425,8 @@ object Dedup {
     * the index side); the delta side shuffles once on h for its own
     * group-agg and the anti-join rides the same partitioning. */
   def dedupIncremental(spark: SparkSession, sfDir: String): DataFrame = {
-    import spark.implicits._
-    val docs = Tables.documents(spark, sfDir)
-    dedupIncrementalOn(
-      docs.filter(pmod($"doc_id", lit(SnapshotMod)) < SnapshotNewMin),
-      docs.filter(pmod($"doc_id", lit(SnapshotMod)) >= SnapshotNewMin))
+    val (prior, fresh) = snapshotSplit(Tables.documents(spark, sfDir), "doc_id")
+    dedupIncrementalOn(prior, fresh)
   }
 
   /** The transform of [[dedupIncremental]] over any (prior, fresh)
@@ -448,14 +463,11 @@ object Dedup {
   def dedupIncrementalStored(spark: SparkSession, sfDir: String): DataFrame = {
     import graft.sources.IndexStore
     import spark.implicits._
-    val docs = Tables.documents(spark, sfDir)
+    val (prior, fresh) = snapshotSplit(Tables.documents(spark, sfDir), "doc_id")
     val priorIdx = IndexStore.readOrBuild(spark,
-      IndexStore.artifactPath(spark, sfDir, "exact_hash_idx", "documents",
-        Seq(SnapshotMod, SnapshotNewMin)),
-      docs.filter(pmod($"doc_id", lit(SnapshotMod)) < SnapshotNewMin)
-        .select(md5($"text").as("h")).distinct())
-    dedupIncrementalTail(priorIdx,
-      docs.filter(pmod($"doc_id", lit(SnapshotMod)) >= SnapshotNewMin))
+      IndexStore.artifactPath(spark, sfDir, "exact_hash_idx", "documents", SnapshotKey),
+      prior.select(md5($"text").as("h")).distinct())
+    dedupIncrementalTail(priorIdx, fresh)
   }
 
   /** Bloom sizing for [[dedupIncrementalBloom]]: 2²⁰ expected items over
@@ -479,11 +491,8 @@ object Dedup {
     * the confirm join stays bucketed on disk; the delta side that
     * reaches it is two orders of magnitude smaller than the crawl. */
   def dedupIncrementalBloom(spark: SparkSession, sfDir: String): DataFrame = {
-    import spark.implicits._
-    val docs = Tables.documents(spark, sfDir)
-    dedupIncrementalBloomOn(
-      docs.filter(pmod($"doc_id", lit(SnapshotMod)) < SnapshotNewMin),
-      docs.filter(pmod($"doc_id", lit(SnapshotMod)) >= SnapshotNewMin))
+    val (prior, fresh) = snapshotSplit(Tables.documents(spark, sfDir), "doc_id")
+    dedupIncrementalBloomOn(prior, fresh)
   }
 
   /** The transform of [[dedupIncrementalBloom]] over any (prior, fresh)
@@ -759,11 +768,8 @@ object Dedup {
     * shared shingle arrays as [[dedupMinHashLsh]], so recall holds to
     * the same exact-pair oracle (restricted to cross-snapshot pairs). */
   def dedupMinHashIncremental(spark: SparkSession, sfDir: String): DataFrame = {
-    import spark.implicits._
-    val docs = Tables.documents(spark, sfDir)
-    dedupMinHashIncrementalOn(
-      docs.filter(pmod($"doc_id", lit(SnapshotMod)) < SnapshotNewMin),
-      docs.filter(pmod($"doc_id", lit(SnapshotMod)) >= SnapshotNewMin))
+    val (prior, fresh) = snapshotSplit(Tables.documents(spark, sfDir), "doc_id")
+    dedupMinHashIncrementalOn(prior, fresh)
   }
 
   /** The ONE (doc_id, hv sorted shingle-hash array) projection of the
@@ -845,20 +851,16 @@ object Dedup {
     * incremental query. */
   def dedupMinHashStored(spark: SparkSession, sfDir: String): DataFrame = {
     import graft.sources.IndexStore
-    import spark.implicits._
-    val docs = Tables.documents(spark, sfDir)
+    val (prior, fresh) = snapshotSplit(Tables.documents(spark, sfDir), "doc_id")
     val sigs = IndexStore.readOrBuild(spark,
       IndexStore.artifactPath(spark, sfDir, "minhash_sigs", "documents",
-        Seq(NumHashes, SnapshotMod, SnapshotNewMin)),
-      minhashHashed(
-        docs.filter(pmod($"doc_id", lit(SnapshotMod)) < SnapshotNewMin)))
+        Seq(NumHashes) ++ SnapshotKey),
+      minhashHashed(prior))
     val bands = IndexStore.readOrBuild(spark,
       IndexStore.artifactPath(spark, sfDir, "minhash_bands", "documents",
-        Seq(NumHashes, NumBands, SnapshotMod, SnapshotNewMin)),
+        Seq(NumHashes, NumBands) ++ SnapshotKey),
       minhashBanded(sigs), partitionCols = Seq("band"))
-    minhashIncrementalTail(sigs, bands,
-      minhashHashed(
-        docs.filter(pmod($"doc_id", lit(SnapshotMod)) >= SnapshotNewMin)))
+    minhashIncrementalTail(sigs, bands, minhashHashed(fresh))
   }
 
   /** INCREMENTAL embedding near-dup — the embedding-space member of
@@ -872,11 +874,8 @@ object Dedup {
     * band-index argument in embedding space — and the probe join is
     * exchange-free on the index side. */
   def dedupEmbedCosineIncremental(spark: SparkSession, sfDir: String): DataFrame = {
-    import spark.implicits._
-    val emb = Tables.embeddings(spark, sfDir)
-    dedupEmbedCosineIncrementalOn(
-      emb.filter(pmod($"vec_id", lit(SnapshotMod)) < SnapshotNewMin),
-      emb.filter(pmod($"vec_id", lit(SnapshotMod)) >= SnapshotNewMin))
+    val (prior, fresh) = snapshotSplit(Tables.embeddings(spark, sfDir), "vec_id")
+    dedupEmbedCosineIncrementalOn(prior, fresh)
   }
 
   /** The transform of [[dedupEmbedCosineIncremental]] over any (prior,
@@ -947,19 +946,15 @@ object Dedup {
     * are IDENTICAL to the inline incremental query. */
   def dedupEmbedCosineStored(spark: SparkSession, sfDir: String): DataFrame = {
     import graft.sources.IndexStore
-    import spark.implicits._
-    val emb = Tables.embeddings(spark, sfDir)
+    val (prior, fresh) = snapshotSplit(Tables.embeddings(spark, sfDir), "vec_id")
     val vecs = IndexStore.readOrBuild(spark,
-      IndexStore.artifactPath(spark, sfDir, "embed_vecs", "embeddings",
-        Seq(SnapshotMod, SnapshotNewMin)),
-      embedSideOf(
-        emb.filter(pmod($"vec_id", lit(SnapshotMod)) < SnapshotNewMin)))
+      IndexStore.artifactPath(spark, sfDir, "embed_vecs", "embeddings", SnapshotKey),
+      embedSideOf(prior))
     val bands = IndexStore.readOrBuild(spark,
       IndexStore.artifactPath(spark, sfDir, "embed_bands", "embeddings",
-        Seq(EmbedBands, EmbedBandBits, SnapshotMod, SnapshotNewMin)),
+        Seq(EmbedBands, EmbedBandBits) ++ SnapshotKey),
       embedBanded(vecs), partitionCols = Seq("c"))
-    embedIncrementalTail(bands, vecs,
-      emb.filter(pmod($"vec_id", lit(SnapshotMod)) >= SnapshotNewMin))
+    embedIncrementalTail(bands, vecs, fresh)
   }
 
   /** The dedup *result*: documents kept after dropping the higher doc_id
@@ -1639,11 +1634,8 @@ object Dedup {
     * identical Hamming ≤ 15 ∧ Jaccard ≥ 0.8 predicate restricted to
     * prior × fresh, so the hash gate is exact — no recall assumption. */
   def dedupSimHashIncremental(spark: SparkSession, sfDir: String): DataFrame = {
-    import spark.implicits._
-    val docs = Tables.documents(spark, sfDir)
-    dedupSimHashIncrementalOn(
-      docs.filter(pmod($"doc_id", lit(SnapshotMod)) < SnapshotNewMin),
-      docs.filter(pmod($"doc_id", lit(SnapshotMod)) >= SnapshotNewMin))
+    val (prior, fresh) = snapshotSplit(Tables.documents(spark, sfDir), "doc_id")
+    dedupSimHashIncrementalOn(prior, fresh)
   }
 
   /** The transform of [[dedupSimHashIncremental]] over any (prior,
@@ -1778,20 +1770,15 @@ object Dedup {
     * query. */
   def dedupSimHashStored(spark: SparkSession, sfDir: String): DataFrame = {
     import graft.sources.IndexStore
-    import spark.implicits._
-    val docs = Tables.documents(spark, sfDir)
+    val (prior, fresh) = snapshotSplit(Tables.documents(spark, sfDir), "doc_id")
     val sigs = IndexStore.readOrBuild(spark,
-      IndexStore.artifactPath(spark, sfDir, "simhash_sigs", "documents",
-        Seq(SnapshotMod, SnapshotNewMin)),
-      simhashHashed(
-        docs.filter(pmod($"doc_id", lit(SnapshotMod)) < SnapshotNewMin)))
+      IndexStore.artifactPath(spark, sfDir, "simhash_sigs", "documents", SnapshotKey),
+      simhashHashed(prior))
     val index = IndexStore.readOrBuild(spark,
       IndexStore.artifactPath(spark, sfDir, "simhash_chunks", "documents",
-        Seq(SimHashChunks, SimHashChunkBits, SnapshotMod, SnapshotNewMin)),
+        Seq(SimHashChunks, SimHashChunkBits) ++ SnapshotKey),
       simhashChunkIndex(sigs), partitionCols = Seq("c"))
-    simhashIncrementalTail(sigs, index,
-      simhashHashed(
-        docs.filter(pmod($"doc_id", lit(SnapshotMod)) >= SnapshotNewMin)))
+    simhashIncrementalTail(sigs, index, simhashHashed(fresh))
   }
 
   /** The prior side's 16-BIT-geometry band index over a
@@ -1883,11 +1870,8 @@ object Dedup {
     * IDENTICAL to the 8-bit incremental (DedupSpec pins the two
     * engines row-for-row). */
   def dedupSimHashIncrementalB16(spark: SparkSession, sfDir: String): DataFrame = {
-    import spark.implicits._
-    val docs = Tables.documents(spark, sfDir)
-    dedupSimHashIncrementalB16On(
-      docs.filter(pmod($"doc_id", lit(SnapshotMod)) < SnapshotNewMin),
-      docs.filter(pmod($"doc_id", lit(SnapshotMod)) >= SnapshotNewMin))
+    val (prior, fresh) = snapshotSplit(Tables.documents(spark, sfDir), "doc_id")
+    dedupSimHashIncrementalB16On(prior, fresh)
   }
 
   /** The transform of [[dedupSimHashIncrementalB16]] over any (prior,
@@ -1906,20 +1890,15 @@ object Dedup {
     * daily ingest actually maintains. */
   def dedupSimHashStoredB16(spark: SparkSession, sfDir: String): DataFrame = {
     import graft.sources.IndexStore
-    import spark.implicits._
-    val docs = Tables.documents(spark, sfDir)
+    val (prior, fresh) = snapshotSplit(Tables.documents(spark, sfDir), "doc_id")
     val sigs = IndexStore.readOrBuild(spark,
-      IndexStore.artifactPath(spark, sfDir, "simhash_sigs", "documents",
-        Seq(SnapshotMod, SnapshotNewMin)),
-      simhashHashed(
-        docs.filter(pmod($"doc_id", lit(SnapshotMod)) < SnapshotNewMin)))
+      IndexStore.artifactPath(spark, sfDir, "simhash_sigs", "documents", SnapshotKey),
+      simhashHashed(prior))
     val index = IndexStore.readOrBuild(spark,
       IndexStore.artifactPath(spark, sfDir, "simhash_chunks_b16", "documents",
-        Seq(SimHashB16Chunks, SimHashB16Bits, SnapshotMod, SnapshotNewMin)),
+        Seq(SimHashB16Chunks, SimHashB16Bits) ++ SnapshotKey),
       simhashChunkIndexB16(sigs), partitionCols = Seq("c"))
-    simhashIncrementalB16Tail(sigs, index,
-      simhashHashed(
-        docs.filter(pmod($"doc_id", lit(SnapshotMod)) >= SnapshotNewMin)))
+    simhashIncrementalB16Tail(sigs, index, simhashHashed(fresh))
   }
 
   /** Embedding-space near-dup/similarity pairs: same-label blocked
@@ -2257,7 +2236,7 @@ object Dedup {
     dedupClustersIncrementalOn(
       Tables.documents(spark, sfDir).select($"doc_id"),
       dedupNgramJaccard(spark, sfDir).select($"doc_a", $"doc_b"),
-      id => pmod(id, lit(SnapshotMod)) >= SnapshotNewMin)
+      isFresh)
   }
 
   /** The transform of [[dedupClustersIncremental]] over any (doc_id)
@@ -2349,12 +2328,9 @@ object Dedup {
     * production index maintains), so cap semantics match the
     * whole-corpus batch query. Same integer output contract. */
   def dedupWinnowIncremental(spark: SparkSession, sfDir: String): DataFrame = {
-    import spark.implicits._
-    val docs = Tables.documents(spark, sfDir)
-      .repartition(spark.sparkContext.defaultParallelism)
-    winnowIncrementalOn(
-      docs.filter(pmod($"doc_id", lit(SnapshotMod)) < SnapshotNewMin),
-      docs.filter(pmod($"doc_id", lit(SnapshotMod)) >= SnapshotNewMin))
+    val (prior, fresh) = snapshotSplit(Tables.documents(spark, sfDir)
+      .repartition(spark.sparkContext.defaultParallelism), "doc_id")
+    winnowIncrementalOn(prior, fresh)
   }
 
   /** The transform over any (prior, fresh) pair of (doc_id, text)
@@ -2433,23 +2409,19 @@ object Dedup {
   def dedupWinnowStored(spark: SparkSession, sfDir: String): DataFrame = {
     import graft.sources.IndexStore
     import spark.implicits._
-    val docs = Tables.documents(spark, sfDir)
-      .repartition(spark.sparkContext.defaultParallelism)
+    val (prior, fresh) = snapshotSplit(Tables.documents(spark, sfDir)
+      .repartition(spark.sparkContext.defaultParallelism), "doc_id")
     val fpsP = IndexStore.readOrBuild(spark,
       IndexStore.artifactPath(spark, sfDir, "winnow_fps", "documents",
         Seq(graft.functions.WinnowImpl.GramLen, graft.functions.WinnowImpl.Window,
-          graft.functions.WinnowImpl.Base, graft.functions.WinnowImpl.Mod,
-          SnapshotMod, SnapshotNewMin)),
-      winnowFps(
-        docs.filter(pmod($"doc_id", lit(SnapshotMod)) < SnapshotNewMin)))
+          graft.functions.WinnowImpl.Base, graft.functions.WinnowImpl.Mod) ++ SnapshotKey),
+      winnowFps(prior))
     val dfP = IndexStore.readOrBuild(spark,
       IndexStore.artifactPath(spark, sfDir, "winnow_df", "documents",
         Seq(graft.functions.WinnowImpl.GramLen, graft.functions.WinnowImpl.Window,
-          graft.functions.WinnowImpl.Base, graft.functions.WinnowImpl.Mod,
-          SnapshotMod, SnapshotNewMin)),
+          graft.functions.WinnowImpl.Base, graft.functions.WinnowImpl.Mod) ++ SnapshotKey),
       fpsP.groupBy($"g").agg(count(lit(1)).as("df")))
-    winnowIncrementalTail(fpsP, dfP,
-      docs.filter(pmod($"doc_id", lit(SnapshotMod)) >= SnapshotNewMin))
+    winnowIncrementalTail(fpsP, dfP, fresh)
   }
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
@@ -2497,11 +2469,11 @@ object Dedup {
   private val incrementalSql: String =
     s"""WITH idx AS (
       |  SELECT DISTINCT md5(text) AS h FROM documents
-      |  WHERE doc_id % $SnapshotMod < $SnapshotNewMin
+      |  WHERE ${priorSql("doc_id")}
       |),
       |nw AS (
       |  SELECT md5(text) AS h, min(doc_id) AS keep_id, count(*) AS n_new
-      |  FROM documents WHERE doc_id % $SnapshotMod >= $SnapshotNewMin
+      |  FROM documents WHERE ${freshSql("doc_id")}
       |  GROUP BY md5(text)
       |)
       |SELECT h, keep_id, n_new FROM nw
@@ -2709,8 +2681,8 @@ object Dedup {
       |common AS (
       |  SELECT a.doc_id ai, b.doc_id bi, count(*) c
       |  FROM pr a JOIN pr b ON a.h = b.h
-      |  WHERE a.doc_id % $SnapshotMod < $SnapshotNewMin
-      |    AND b.doc_id % $SnapshotMod >= $SnapshotNewMin
+      |  WHERE ${priorSql("a.doc_id")}
+      |    AND ${freshSql("b.doc_id")}
       |  GROUP BY a.doc_id, b.doc_id
       |)
       |SELECT ai AS doc_a, bi AS doc_b,
@@ -2814,8 +2786,8 @@ object Dedup {
       |common AS (
       |  SELECT a.doc_id ai, b.doc_id bi, count(*) c
       |  FROM sh a JOIN sh b ON a.s = b.s
-      |  WHERE a.doc_id % $SnapshotMod < $SnapshotNewMin
-      |    AND b.doc_id % $SnapshotMod >= $SnapshotNewMin
+      |  WHERE ${priorSql("a.doc_id")}
+      |    AND ${freshSql("b.doc_id")}
       |  GROUP BY a.doc_id, b.doc_id
       |)
       |SELECT ai AS doc_a, bi AS doc_b,
@@ -2839,14 +2811,14 @@ object Dedup {
        |    array_to_string(t[i : i + $ExactSubstrTokens - 1], ' ') AS g
        |  FROM (SELECT doc_id, unnest(range(1, len(t) - $ExactSubstrTokens + 2)) AS i, t
        |        FROM toks
-       |        WHERE doc_id % $SnapshotMod >= $SnapshotNewMin
+       |        WHERE ${freshSql("doc_id")}
        |          AND len(t) >= $ExactSubstrTokens)
        |),
        |pg AS (
        |  SELECT DISTINCT array_to_string(t[i : i + $ExactSubstrTokens - 1], ' ') AS g
        |  FROM (SELECT unnest(range(1, len(t) - $ExactSubstrTokens + 2)) AS i, t
        |        FROM toks
-       |        WHERE doc_id % $SnapshotMod < $SnapshotNewMin
+       |        WHERE ${priorSql("doc_id")}
        |          AND len(t) >= $ExactSubstrTokens)
        |),
        |wf AS (
@@ -2879,8 +2851,8 @@ object Dedup {
        |wdf AS (SELECT g, count(*) AS df FROM wf GROUP BY g),
        |wk AS (SELECT wf.doc_id, wf.g FROM wf JOIN wdf USING (g)
        |       WHERE df <= $WinnowDfCap),
-       |wkf AS (SELECT * FROM wk WHERE doc_id % $SnapshotMod >= $SnapshotNewMin),
-       |wkp AS (SELECT * FROM wk WHERE doc_id % $SnapshotMod < $SnapshotNewMin),
+       |wkf AS (SELECT * FROM wk WHERE ${freshSql("doc_id")}),
+       |wkp AS (SELECT * FROM wk WHERE ${priorSql("doc_id")}),
        |wsz AS (SELECT doc_id, count(*) AS n FROM wk GROUP BY doc_id),
        |wcand AS (
        |  SELECT a.doc_id AS fa, b.doc_id AS fb
@@ -3094,8 +3066,8 @@ object Dedup {
       |      (sqrt(list_dot_product(a.embedding::DOUBLE[], a.embedding::DOUBLE[])) *
       |       sqrt(list_dot_product(b.embedding::DOUBLE[], b.embedding::DOUBLE[]))) AS cos
       |  FROM v a JOIN v b ON a.label = b.label
-      |    AND a.vec_id % $SnapshotMod < $SnapshotNewMin
-      |    AND b.vec_id % $SnapshotMod >= $SnapshotNewMin
+      |    AND ${priorSql("a.vec_id")}
+      |    AND ${freshSql("b.vec_id")}
       |    AND ($embedBandMatch)
       |)
       |SELECT vec_a, vec_b, label, round(cos, 4) AS cosine

@@ -182,16 +182,12 @@ object Similarity {
     * vec_id % [[Dedup.SnapshotMod]] ≥ [[Dedup.SnapshotNewMin]] is the
     * fresh delta. */
   def simAnnIvfIncremental(spark: SparkSession, sfDir: String): DataFrame = {
-    import spark.implicits._
     val e = embeddings(spark, sfDir)
     val cents = seedCentroids(e)
     val scoreArr = cosineScores(cents)
-    val assigned = assignedCells(
-        e.filter(pmod($"vec_id", lit(Dedup.SnapshotMod)) < Dedup.SnapshotNewMin),
-        scoreArr)
-      .unionByName(assignedCells(
-        e.filter(pmod($"vec_id", lit(Dedup.SnapshotMod)) >= Dedup.SnapshotNewMin),
-        scoreArr))
+    val (prior, fresh) = Dedup.snapshotSplit(e, "vec_id")
+    val assigned = assignedCells(prior, scoreArr)
+      .unionByName(assignedCells(fresh, scoreArr))
     ivfSearchOverAssigned(e, assigned, scoreArr, NProbe)
   }
 
@@ -867,14 +863,12 @@ object Similarity {
     val e = embeddings(spark, sfDir)
     val cents = seedCentroids(e)
     val residFrame = ivfResidFrame(e, cents)
-    val priorResid = residFrame
-      .filter(pmod($"vec_id", lit(Dedup.SnapshotMod)) < Dedup.SnapshotNewMin)
+    val priorResid = residFrame.filter(Dedup.isPrior($"vec_id"))
     val cb = fitPriorResidCodebooks(priorResid)
     val codes =
       if (sliced)
-        ivfPqEncode(priorResid, cb).unionByName(ivfPqEncode(
-          residFrame.filter(
-            pmod($"vec_id", lit(Dedup.SnapshotMod)) >= Dedup.SnapshotNewMin), cb))
+        ivfPqEncode(priorResid, cb).unionByName(
+          ivfPqEncode(residFrame.filter(Dedup.isFresh($"vec_id")), cb))
       else ivfPqEncode(residFrame, cb)
     ivfPqAdcSearch(e, cents, cb, codes, NProbe)
   }
@@ -898,18 +892,16 @@ object Similarity {
     import graft.sources.IndexStore
     import spark.implicits._
     val e = embeddings(spark, sfDir)
-    val isPrior = pmod($"vec_id", lit(Dedup.SnapshotMod)) < Dedup.SnapshotNewMin
+    val isPrior = Dedup.isPrior($"vec_id")
     val modelFrame = IndexStore.readOrBuild(spark,
       IndexStore.artifactPath(spark, sfDir, "ivfpq_models", "embeddings",
-        Seq(NumCentroids, KMeansIters, PqSubspaces, Pq8Codewords,
-          Dedup.SnapshotMod, Dedup.SnapshotNewMin)),
+        Seq(NumCentroids, KMeansIters, PqSubspaces, Pq8Codewords) ++ Dedup.SnapshotKey),
       { val (cents, cb) = ivfPqFrozenModels(spark, sfDir)
         ivfPqModelsToFrame(spark, cents, cb) })
     val (cents, cb) = ivfPqModelsFromFrame(modelFrame)
     val codes = IndexStore.readOrBuild(spark,
       IndexStore.artifactPath(spark, sfDir, "ivfpq_codes", "embeddings",
-        Seq(NumCentroids, KMeansIters, PqSubspaces, Pq8Codewords,
-          Dedup.SnapshotMod, Dedup.SnapshotNewMin)),
+        Seq(NumCentroids, KMeansIters, PqSubspaces, Pq8Codewords) ++ Dedup.SnapshotKey),
       ivfPqEncode(ivfResidFrame(e.filter(isPrior), cents), cb),
       partitionCols = Seq("cell"))
       .select($"vec_id", $"cell", $"code")
@@ -957,7 +949,7 @@ object Similarity {
     val e = embeddings(spark, sfDir)
     val cents = seedCentroids(e)
     val priorResid = ivfResidFrame(
-      e.filter(pmod($"vec_id", lit(Dedup.SnapshotMod)) < Dedup.SnapshotNewMin), cents)
+      e.filter(Dedup.isPrior($"vec_id")), cents)
     (cents, fitPriorResidCodebooks(priorResid))
   }
 
@@ -1266,9 +1258,9 @@ object Similarity {
          |      SELECT row_number() OVER (ORDER BY vec_id) - 1 AS c, r
          |      FROM resid
          |      WHERE vec_id >= $IvfPqSeedBase
-         |        AND vec_id % ${Dedup.SnapshotMod} < ${Dedup.SnapshotNewMin}
+         |        AND ${Dedup.priorSql("vec_id")}
          |      ORDER BY vec_id LIMIT $NumCentroids) q)""".stripMargin,
-      s"s.vec_id % ${Dedup.SnapshotMod} < ${Dedup.SnapshotNewMin}"))
+      Dedup.priorSql("s.vec_id")))
 
   /** Cosine over two LIST-valued SQL expressions (the k-means mirror
     * scores vectors against COMPUTED centroid lists, not table
@@ -1623,12 +1615,12 @@ object Similarity {
          |      SELECT row_number() OVER (ORDER BY vec_id) - 1 AS c, r
          |      FROM resid
          |      WHERE vec_id >= $IvfPqSeedBase
-         |        AND vec_id % ${Dedup.SnapshotMod} < ${Dedup.SnapshotNewMin}
+         |        AND ${Dedup.priorSql("vec_id")}
          |      ORDER BY vec_id LIMIT $NumCentroids) q)""".stripMargin,
-      s"s.vec_id % ${Dedup.SnapshotMod} < ${Dedup.SnapshotNewMin}"),
+      Dedup.priorSql("s.vec_id")),
       s"""SELECT c.vec_id, a.cell, c.m, c.code
          |FROM codes c JOIN assign a USING (vec_id)
-         |WHERE c.vec_id % ${Dedup.SnapshotMod} >= ${Dedup.SnapshotNewMin}
+         |WHERE ${Dedup.freshSql("c.vec_id")}
          |ORDER BY c.vec_id, c.m""".stripMargin)
 
   val oracles: Map[String, String] = Map(

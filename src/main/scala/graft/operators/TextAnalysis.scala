@@ -1246,11 +1246,8 @@ object TextAnalysis {
   }
 
   def textLmScore(spark: SparkSession, sfDir: String): DataFrame = {
-    import spark.implicits._
-    val docs = Tables.documents(spark, sfDir)
-    textLmScoreOn(
-      docs.filter(pmod($"doc_id", lit(Dedup.SnapshotMod)) < Dedup.SnapshotNewMin),
-      docs.filter(pmod($"doc_id", lit(Dedup.SnapshotMod)) >= Dedup.SnapshotNewMin))
+    val (prior, fresh) = Dedup.snapshotSplit(Tables.documents(spark, sfDir), "doc_id")
+    textLmScoreOn(prior, fresh)
   }
 
   /** (doc_id, w1, w2) bigram-occurrence fan-out — the ONE bigram
@@ -1412,7 +1409,6 @@ object TextAnalysis {
     * map work + the per-doc agg. The streaming twin
     * (`stream_quality_model`) reads the same model frame at ingest. */
   def textQualityModel(spark: SparkSession, sfDir: String): DataFrame = {
-    import spark.implicits._
     // Expansion parallelism decoupled from input-split count: the gram
     // fan-out (an md5 per unigram AND bigram — millions of hashes) is
     // compute-bound map work, and a single-file scan would serialize it
@@ -1420,11 +1416,9 @@ object TextAnalysis {
     // round-robin exchange moves raw doc bytes once — orders of
     // magnitude cheaper than the hashing it parallelizes; at production
     // split counts it only rebalances skew.
-    val docs = Tables.documents(spark, sfDir)
-      .repartition(spark.sparkContext.defaultParallelism)
-    textQualityModelOn(
-      docs.filter(pmod($"doc_id", lit(Dedup.SnapshotMod)) < Dedup.SnapshotNewMin),
-      docs.filter(pmod($"doc_id", lit(Dedup.SnapshotMod)) >= Dedup.SnapshotNewMin))
+    val (prior, fresh) = Dedup.snapshotSplit(Tables.documents(spark, sfDir)
+      .repartition(spark.sparkContext.defaultParallelism), "doc_id")
+    textQualityModelOn(prior, fresh)
   }
 
   /** The transform over any (fit, score) pair of (doc_id, text) frames
@@ -1591,21 +1585,21 @@ object TextAnalysis {
          |fitb AS (
          |  SELECT unnest([{'w1': t[i], 'w2': t[i+1]} for i in range(1, len(t))]) AS bg
          |  FROM toks
-         |  WHERE doc_id % ${Dedup.SnapshotMod} < ${Dedup.SnapshotNewMin}
+         |  WHERE ${Dedup.priorSql("doc_id")}
          |    AND len(t) >= 2
          |),
          |c2 AS (SELECT bg.w1 AS w1, bg.w2 AS w2, count(*) AS c2
          |       FROM fitb GROUP BY bg.w1, bg.w2),
          |c1 AS (SELECT w, count(*) AS c1 FROM (
          |         SELECT unnest(t) AS w FROM toks
-         |         WHERE doc_id % ${Dedup.SnapshotMod} < ${Dedup.SnapshotNewMin})
+         |         WHERE ${Dedup.priorSql("doc_id")})
          |       GROUP BY w),
          |tot AS (SELECT count(*) AS v FROM c1),
          |fb AS (
          |  SELECT doc_id,
          |    unnest([{'w1': t[i], 'w2': t[i+1]} for i in range(1, len(t))]) AS bg
          |  FROM toks
-         |  WHERE doc_id % ${Dedup.SnapshotMod} >= ${Dedup.SnapshotNewMin}
+         |  WHERE ${Dedup.freshSql("doc_id")}
          |    AND len(t) >= 2
          |),
          |scored AS (
@@ -2124,8 +2118,8 @@ object TextAnalysis {
     // features with the Q/2 unseen prior
     "text_quality_model" ->
       s"""WITH ${qmScoreCtes(
-            s"(SELECT text FROM documents WHERE doc_id % ${Dedup.SnapshotMod} < ${Dedup.SnapshotNewMin})",
-            s"(SELECT doc_id, text FROM documents WHERE doc_id % ${Dedup.SnapshotMod} >= ${Dedup.SnapshotNewMin})")}
+            s"(SELECT text FROM documents WHERE ${Dedup.priorSql("doc_id")})",
+            s"(SELECT doc_id, text FROM documents WHERE ${Dedup.freshSql("doc_id")})")}
         |SELECT doc_id, n_feats, sum_q,
         |  CAST(sum_q AS DOUBLE) / CAST(n_feats AS DOUBLE) AS score
         |FROM qm_scores ORDER BY doc_id""".stripMargin,

@@ -20,6 +20,13 @@ object Tables {
   def load(spark: SparkSession, sfDir: String, name: String): DataFrame =
     spark.read.parquet(s"$sfDir/$name.parquet")
 
+  /** Streaming file scan of one table: a file stream source needs its
+    * schema up front (taken from the batch footer, as [[load]] infers
+    * it) and watches a directory, so the table is selected by glob. */
+  def stream(spark: SparkSession, sfDir: String, name: String): DataFrame =
+    spark.readStream.schema(load(spark, sfDir, name).schema)
+      .option("pathGlobFilter", s"$name.parquet").parquet(sfDir)
+
   def region(s: SparkSession, d: String): DataFrame = load(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame = load(s, d, "nation")
   def customer(s: SparkSession, d: String): DataFrame = load(s, d, "customer")
@@ -80,16 +87,27 @@ object Tables {
     * every later NANOS read on the session (TablesSpec pins both). For
     * non-NANOS footers the flag is a no-op and `normalizeEventsTs`
     * handles the encoding it finds. */
-  def events(s: SparkSession, d: String): DataFrame = {
+  private def scopedEvents(s: SparkSession)(read: => DataFrame): DataFrame = {
     val key = "spark.sql.legacy.parquet.nanosAsLong"
     val prev = s.conf.getOption(key)
     s.conf.set(key, "true")
-    try normalizeEventsTs(load(s, d, "events"))
+    try normalizeEventsTs(read)
     finally prev match {
       case Some(v) => s.conf.set(key, v)
       case None => s.conf.unset(key)
     }
   }
+
+  def events(s: SparkSession, d: String): DataFrame = scopedEvents(s)(load(s, d, "events"))
+
+  /** [[events]] as a stream: the flag is consulted by the batch footer
+    * read that gives [[stream]] its schema, so the same scope covers it
+    * and the stream stays valid after the restore (StreamingSpec pins
+    * both, mirroring TablesSpec); NANOS-as-long, TIMESTAMP and
+    * TIMESTAMP_NTZ testdata all stream identically. */
+  def eventsStream(s: SparkSession, d: String): DataFrame =
+    scopedEvents(s)(stream(s, d, "events"))
+
   def documents(s: SparkSession, d: String): DataFrame = load(s, d, "documents")
   def embeddings(s: SparkSession, d: String): DataFrame = load(s, d, "embeddings")
 }

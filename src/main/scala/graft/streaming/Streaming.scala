@@ -4,6 +4,8 @@ import java.util.concurrent.atomic.AtomicInteger
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.operators.WordCount
+import graft.operators.Dedup.{freshSql, isFresh, isPrior}
+import graft.sources.Tables
 
 /** Structured Streaming surface: the reference's pipeline-parallel
   * "streaming" (reader→mapper queues, `omp.cpp:13,73-109`) re-expressed
@@ -31,32 +33,19 @@ object Streaming {
     sdf.sparkSession.table(name)
   }
 
-  /** Streaming scan of the events parquet with the same nanos→timestamp
-    * handling as the batch path (Tables.events) — including the same
-    * scoped set/restore of the session-global `nanosAsLong` flag: it is
-    * consulted only when the footer schema is converted (here, the
-    * batch schema-inference read; the stream itself gets that schema
-    * explicitly), so restoring immediately keeps the stream valid
-    * without leaking legacy-long NANOS reads to the rest of the
-    * session (StreamingSpec pins both, mirroring TablesSpec). */
-  private def eventsStream(spark: SparkSession, sfDir: String): DataFrame = {
-    val key = "spark.sql.legacy.parquet.nanosAsLong"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, "true")
-    try {
-      val schema = spark.read.parquet(s"$sfDir/events.parquet").schema
-      // file stream sources take a directory; select the one table via glob.
-      // ts encoding normalization shared with the batch path — sniffs the
-      // inferred schema, so NANOS-as-long, TIMESTAMP, and TIMESTAMP_NTZ
-      // testdata all stream identically (see Tables.normalizeEventsTs).
-      graft.sources.Tables.normalizeEventsTs(
-        spark.readStream.schema(schema)
-          .option("pathGlobFilter", "events.parquet").parquet(sfDir))
-    } finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
-    }
-  }
+  /** The synthetic in-window event time the TTL forms run on, since
+    * documents carry none: a fixed epoch second plus `pmod(doc_id, 3600)`,
+    * so every row of a table lands inside one hour (the keep path, not
+    * eviction churn) and bounded replays equal the batch oracle. */
+  private[graft] def withInWindowTs(df: DataFrame): DataFrame =
+    df.withColumn("ts", timestamp_seconds(lit(1700000000L) + pmod(col("doc_id"), lit(3600))))
+
+  /** `(prior, fresh)` of the documents table: the prior snapshot as a
+    * batch frame, the fresh delta as a stream — what every warm-started
+    * streaming twin of an incremental batch query reads. */
+  private def priorAndFreshStream(spark: SparkSession, sfDir: String): (DataFrame, DataFrame) =
+    (Tables.documents(spark, sfDir).filter(isPrior(col("doc_id"))),
+      Tables.stream(spark, sfDir, "documents").filter(isFresh(col("doc_id"))))
 
   /** Hourly windowed event aggregation as a stream — same semantics as
     * the batch q14, same DuckDB oracle. Uses a real event-time window
@@ -64,7 +53,7 @@ object Streaming {
     * unbounded source). */
   def streamEventsHourly(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    val agg = eventsStream(spark, sfDir)
+    val agg = Tables.eventsStream(spark, sfDir)
       .withWatermark("ts", "1 hour")
       .groupBy(window($"ts", "1 hour").as("w"), $"event_type")
       .agg(count(lit(1)).as("n"), round(sum($"value"), 2).as("total_value"))
@@ -77,9 +66,7 @@ object Streaming {
     * the batch oracle. */
   def streamWordCounts(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    val schema = spark.read.parquet(s"$sfDir/documents.parquet").schema
-    val docs = spark.readStream.schema(schema)
-      .option("pathGlobFilter", "documents.parquet").parquet(sfDir)
+    val docs = Tables.stream(spark, sfDir, "documents")
     val counts = WordCount.counts(WordCount.tokenize(docs, "text"))
     runToMemory(counts, "complete").orderBy($"word")
   }
@@ -93,7 +80,7 @@ object Streaming {
   def streamUserTotals(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
     import org.apache.spark.sql.streaming.GroupStateTimeout
-    val ds = eventsStream(spark, sfDir)
+    val ds = Tables.eventsStream(spark, sfDir)
       .select($"user_id", $"value").as[(Long, Double)]
     val updated = ds.groupByKey(_._1)
       .mapGroupsWithState[(Long, Double), (Long, Long, Double)](
@@ -122,7 +109,7 @@ object Streaming {
     import spark.implicits._
     import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode}
     val threshold = 80L
-    val ds = eventsStream(spark, sfDir)
+    val ds = Tables.eventsStream(spark, sfDir)
       .select($"user_id", $"value").as[(Long, Double)]
     val updated = ds.groupByKey(_._1)
       .flatMapGroupsWithState[(Long, Double), (Long, Long, Double)](
@@ -155,11 +142,11 @@ object Streaming {
     * bounded replay yields the complete batch-equivalent result. */
   def streamClickPurchase(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    val clicks = eventsStream(spark, sfDir)
+    val clicks = Tables.eventsStream(spark, sfDir)
       .filter($"event_type" === "click")
       .select($"user_id", $"event_id".as("click_id"), $"ts".as("ts_a"))
       .withWatermark("ts_a", "1 hour")
-    val purchases = eventsStream(spark, sfDir)
+    val purchases = Tables.eventsStream(spark, sfDir)
       .filter($"event_type" === "purchase")
       .select($"user_id".as("p_user"), $"event_id".as("purchase_id"),
         $"ts".as("ts_b"))
@@ -189,10 +176,8 @@ object Streaming {
       .createTempDirectory("graft_stream_ckpt_").toString
     val outDir = s"$base/out"
     val ckpt = s"$base/ckpt"
-    val schema = spark.read.parquet(s"$sfDir/documents.parquet").schema
     def runOnce(): Unit = {
-      val docs = spark.readStream.schema(schema)
-        .option("pathGlobFilter", "documents.parquet").parquet(sfDir)
+      val docs = Tables.stream(spark, sfDir, "documents")
       val q = WordCount.tokenize(docs, "text").writeStream
         .outputMode("append").format("parquet")
         .option("path", outDir).option("checkpointLocation", ckpt)
@@ -220,9 +205,7 @@ object Streaming {
     * LATER batch and watching it fold into the first batch's group. */
   def streamDedupExact(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    val schema = spark.read.parquet(s"$sfDir/documents.parquet").schema
-    val docs = spark.readStream.schema(schema)
-      .option("pathGlobFilter", "documents.parquet").parquet(sfDir)
+    val docs = Tables.stream(spark, sfDir, "documents")
     runDedupStream(docs).orderBy($"h")
   }
 
@@ -318,10 +301,7 @@ object Streaming {
     * itself is pinned by StreamingSpec's three-batch test. */
   def streamDedupExactTTL(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    val schema = spark.read.parquet(s"$sfDir/documents.parquet").schema
-    val docs = spark.readStream.schema(schema)
-      .option("pathGlobFilter", "documents.parquet").parquet(sfDir)
-      .withColumn("ts", timestamp_seconds(lit(1700000000L) + pmod($"doc_id", lit(3600))))
+    val docs = withInWindowTs(Tables.stream(spark, sfDir, "documents"))
     runDedupStreamTTL(docs, "1 hour").orderBy($"h")
   }
 
@@ -415,9 +395,7 @@ object Streaming {
     * one file = one micro-batch, so the result equals batch
     * `dedup_minhash_lsh` and shares its exact-Jaccard oracle. */
   def streamDedupMinhash(spark: SparkSession, sfDir: String): DataFrame = {
-    val schema = spark.read.parquet(s"$sfDir/documents.parquet").schema
-    val docs = spark.readStream.schema(schema)
-      .option("pathGlobFilter", "documents.parquet").parquet(sfDir)
+    val docs = Tables.stream(spark, sfDir, "documents")
     runNearDupStream(docs)
   }
 
@@ -442,19 +420,12 @@ object Streaming {
   def streamDedupMinhashWarmstart(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
     import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode}
-    import graft.operators.Dedup.{SnapshotMod, SnapshotNewMin}
-    val initial = bandCells(
-        graft.sources.Tables.documents(spark, sfDir)
-          .filter(pmod($"doc_id", lit(SnapshotMod)) < SnapshotNewMin))
-      .groupByKey(_._1)
+    val (prior, delta) = priorAndFreshStream(spark, sfDir)
+    val initial = bandCells(prior).groupByKey(_._1)
       // residents sorted by doc_id: the pair set is order-independent,
       // the sort just makes the bootstrapped state deterministic
       .mapGroups((k, it) => (k, it.map(t => (t._2, t._3)).toSeq.sortBy(_._1)))
       .groupByKey(_._1).mapValues(_._2)
-    val schema = spark.read.parquet(s"$sfDir/documents.parquet").schema
-    val delta = spark.readStream.schema(schema)
-      .option("pathGlobFilter", "documents.parquet").parquet(sfDir)
-      .filter(pmod($"doc_id", lit(SnapshotMod)) >= SnapshotNewMin)
     val pairs = bandCells(delta).groupByKey(_._1)
       .flatMapGroupsWithState[Seq[(Long, Array[Long])], (Long, Long, Double)](
         OutputMode.Append, GroupStateTimeout.NoTimeout, initial)(nearDupCell)
@@ -560,11 +531,7 @@ object Streaming {
     * the eviction behavior itself is pinned by StreamingSpec's
     * three-family multi-batch test. */
   def streamDedupMinhashTTL(spark: SparkSession, sfDir: String): DataFrame = {
-    import spark.implicits._
-    val schema = spark.read.parquet(s"$sfDir/documents.parquet").schema
-    val docs = spark.readStream.schema(schema)
-      .option("pathGlobFilter", "documents.parquet").parquet(sfDir)
-      .withColumn("ts", timestamp_seconds(lit(1700000000L) + pmod($"doc_id", lit(3600))))
+    val docs = withInWindowTs(Tables.stream(spark, sfDir, "documents"))
     runNearDupStreamTTL(docs, 3600L * 1000)
   }
 
@@ -617,17 +584,8 @@ object Streaming {
     * warm-start — same pairs-with-a-fresh-member oracle; the eviction
     * of bootstrapped residents is pinned by StreamingSpec. */
   def streamDedupMinhashWarmstartTTL(spark: SparkSession, sfDir: String): DataFrame = {
-    import spark.implicits._
-    import graft.operators.Dedup.{SnapshotMod, SnapshotNewMin}
-    def withTs(df: DataFrame): DataFrame = df.withColumn("ts",
-      timestamp_seconds(lit(1700000000L) + pmod($"doc_id", lit(3600))))
-    val prior = withTs(graft.sources.Tables.documents(spark, sfDir)
-      .filter(pmod($"doc_id", lit(SnapshotMod)) < SnapshotNewMin))
-    val schema = spark.read.parquet(s"$sfDir/documents.parquet").schema
-    val delta = withTs(spark.readStream.schema(schema)
-      .option("pathGlobFilter", "documents.parquet").parquet(sfDir)
-      .filter(pmod($"doc_id", lit(SnapshotMod)) >= SnapshotNewMin))
-    runNearDupStreamWarmstartTTL(delta, prior, 3600L * 1000)
+    val (prior, delta) = priorAndFreshStream(spark, sfDir)
+    runNearDupStreamWarmstartTTL(withInWindowTs(delta), withInWindowTs(prior), 3600L * 1000)
   }
 
   /** STREAMING chunk-level NEAR-dup — [[runNearDupStreamTTL]] keyed on
@@ -650,11 +608,7 @@ object Streaming {
     * sample granularity; cross-batch pairing and eviction are pinned
     * by StreamingSpec's multi-batch chunk test. */
   def streamDedupChunksNgram(spark: SparkSession, sfDir: String): DataFrame = {
-    import spark.implicits._
-    val schema = spark.read.parquet(s"$sfDir/documents.parquet").schema
-    val docs = spark.readStream.schema(schema)
-      .option("pathGlobFilter", "documents.parquet").parquet(sfDir)
-      .withColumn("ts", timestamp_seconds(lit(1700000000L) + pmod($"doc_id", lit(3600))))
+    val docs = withInWindowTs(Tables.stream(spark, sfDir, "documents"))
     runDedupChunksStreamTTL(docs, 3600L * 1000)
   }
 
@@ -817,9 +771,7 @@ object Streaming {
 
   /** [[runPipelineSamplesStream]] over the documents table. */
   def streamPipelineSamples(spark: SparkSession, sfDir: String): DataFrame = {
-    val schema = spark.read.parquet(s"$sfDir/documents.parquet").schema
-    val docs = spark.readStream.schema(schema)
-      .option("pathGlobFilter", "documents.parquet").parquet(sfDir)
+    val docs = Tables.stream(spark, sfDir, "documents")
     runPipelineSamplesStream(docs)
   }
 
@@ -1005,17 +957,9 @@ object Streaming {
     * streams through, synthetic in-window timestamps as in
     * [[streamDedupMinhashWarmstartTTL]] so no eviction fires. */
   def streamPipelineSamplesWarmstart(spark: SparkSession, sfDir: String): DataFrame = {
-    import spark.implicits._
-    import graft.operators.Dedup.{SnapshotMod, SnapshotNewMin}
-    def withTs(df: DataFrame): DataFrame = df.withColumn("ts",
-      timestamp_seconds(lit(1700000000L) + pmod($"doc_id", lit(3600))))
-    val prior = withTs(graft.sources.Tables.documents(spark, sfDir)
-      .filter(pmod($"doc_id", lit(SnapshotMod)) < SnapshotNewMin))
-    val schema = spark.read.parquet(s"$sfDir/documents.parquet").schema
-    val delta = withTs(spark.readStream.schema(schema)
-      .option("pathGlobFilter", "documents.parquet").parquet(sfDir)
-      .filter(pmod($"doc_id", lit(SnapshotMod)) >= SnapshotNewMin))
-    runPipelineSamplesStreamWarmstartTTL(delta, prior, "1 hour")
+    val (prior, delta) = priorAndFreshStream(spark, sfDir)
+    runPipelineSamplesStreamWarmstartTTL(withInWindowTs(delta), withInWindowTs(prior),
+      "1 hour")
   }
 
   /** [[streamPipelineSamples]] through the bounded-state TTL path —
@@ -1025,11 +969,7 @@ object Streaming {
     * batch `cur_pipeline_samples` stages, same oracle; eviction and
     * epoch-restart are pinned by StreamingSpec's multi-batch test. */
   def streamPipelineSamplesTTL(spark: SparkSession, sfDir: String): DataFrame = {
-    import spark.implicits._
-    val schema = spark.read.parquet(s"$sfDir/documents.parquet").schema
-    val docs = spark.readStream.schema(schema)
-      .option("pathGlobFilter", "documents.parquet").parquet(sfDir)
-      .withColumn("ts", timestamp_seconds(lit(1700000000L) + pmod($"doc_id", lit(3600))))
+    val docs = withInWindowTs(Tables.stream(spark, sfDir, "documents"))
     runPipelineSamplesStreamTTL(docs, "1 hour")
   }
 
@@ -1053,7 +993,7 @@ object Streaming {
     * assumes, with a watermark bounding how long a session can stay
     * open. State per user is five longs — O(active users). */
   def streamSessions(spark: SparkSession, sfDir: String): DataFrame =
-    runSessionsStream(eventsStream(spark, sfDir))
+    runSessionsStream(Tables.eventsStream(spark, sfDir))
 
   /** The transform of [[streamSessions]] on any streaming
     * (user_id, event_id, ts) frame (spec entry point: plantable
@@ -1116,12 +1056,10 @@ object Streaming {
   def streamDecontam(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
     import graft.operators.Curation
-    val schema = spark.read.parquet(s"$sfDir/documents.parquet").schema
-    val train = spark.readStream.schema(schema)
-      .option("pathGlobFilter", "documents.parquet").parquet(sfDir)
-      .filter(pmod($"doc_id", lit(Curation.EvalSliceMod)) =!= Curation.EvalSliceRem)
-    val eval = graft.sources.Tables.documents(spark, sfDir)
-      .filter(pmod($"doc_id", lit(Curation.EvalSliceMod)) === Curation.EvalSliceRem)
+    val train = Tables.stream(spark, sfDir, "documents")
+      .filter(Curation.isTrain($"doc_id"))
+    val eval = Tables.documents(spark, sfDir)
+      .filter(Curation.isEval($"doc_id"))
     runDecontamStream(train, eval)
   }
 
@@ -1142,12 +1080,10 @@ object Streaming {
   def streamDecontamStrip(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
     import graft.operators.Curation
-    val schema = spark.read.parquet(s"$sfDir/documents.parquet").schema
-    val train = spark.readStream.schema(schema)
-      .option("pathGlobFilter", "documents.parquet").parquet(sfDir)
-      .filter(pmod($"doc_id", lit(Curation.EvalSliceMod)) =!= Curation.EvalSliceRem)
-    val eval = graft.sources.Tables.documents(spark, sfDir)
-      .filter(pmod($"doc_id", lit(Curation.EvalSliceMod)) === Curation.EvalSliceRem)
+    val train = Tables.stream(spark, sfDir, "documents")
+      .filter(Curation.isTrain($"doc_id"))
+    val eval = Tables.documents(spark, sfDir)
+      .filter(Curation.isEval($"doc_id"))
     runDecontamStripStream(train, eval)
   }
 
@@ -1242,12 +1178,8 @@ object Streaming {
     * (update mode); the fold keeps the max — batch-equal in bounded
     * replay because gate decisions are per-row deterministic. */
   def streamMixSample(spark: SparkSession, sfDir: String): DataFrame = {
-    import spark.implicits._
-    import graft.operators.Curation
-    val schema = spark.read.parquet(s"$sfDir/documents.parquet").schema
-    val stream = spark.readStream.schema(schema)
-      .option("pathGlobFilter", "documents.parquet").parquet(sfDir)
-    val snapshot = graft.sources.Tables.documents(spark, sfDir)
+    val stream = Tables.stream(spark, sfDir, "documents")
+    val snapshot = Tables.documents(spark, sfDir)
     runMixSampleStream(stream, snapshot)
   }
 
@@ -1290,7 +1222,7 @@ object Streaming {
     * batch q19 oracle; eviction and epoch restart are pinned by
     * StreamingSpec's multi-batch test. */
   def streamSessionsTTL(spark: SparkSession, sfDir: String): DataFrame =
-    runSessionsStreamTTL(eventsStream(spark, sfDir))
+    runSessionsStreamTTL(Tables.eventsStream(spark, sfDir))
 
   private[graft] def runSessionsStreamTTL(events: DataFrame): DataFrame =
     foldSessions(runToMemory(sessionsTTLTransform(events), "append"))
@@ -1320,7 +1252,7 @@ object Streaming {
     * total_events, so the shared max-struct fold and the batch q19
     * oracle apply verbatim. */
   def streamSessionsBuffered(spark: SparkSession, sfDir: String): DataFrame =
-    runSessionsStreamBuffered(eventsStream(spark, sfDir))
+    runSessionsStreamBuffered(Tables.eventsStream(spark, sfDir))
 
   private[graft] def runSessionsStreamBuffered(events: DataFrame): DataFrame =
     foldSessions(runToMemory(sessionsBufferedTransform(events), "append"))
@@ -1458,14 +1390,7 @@ object Streaming {
     * split. At 100 TB the model tables are the top-K-pruned broadcast
     * form textLmScore documents. */
   def streamLmScore(spark: SparkSession, sfDir: String): DataFrame = {
-    import spark.implicits._
-    import graft.operators.Dedup.{SnapshotMod, SnapshotNewMin}
-    val schema = spark.read.parquet(s"$sfDir/documents.parquet").schema
-    val stream = spark.readStream.schema(schema)
-      .option("pathGlobFilter", "documents.parquet").parquet(sfDir)
-      .filter(pmod($"doc_id", lit(SnapshotMod)) >= SnapshotNewMin)
-    val prior = graft.sources.Tables.documents(spark, sfDir)
-      .filter(pmod($"doc_id", lit(SnapshotMod)) < SnapshotNewMin)
+    val (prior, stream) = priorAndFreshStream(spark, sfDir)
     runLmScoreStream(stream, prior)
   }
 
@@ -1502,14 +1427,7 @@ object Streaming {
     * batch (update mode), so the post-run fold keeps the max-struct —
     * batch-equal in bounded replay, oracle shared with the batch query. */
   def streamQualityModel(spark: SparkSession, sfDir: String): DataFrame = {
-    import spark.implicits._
-    import graft.operators.Dedup.{SnapshotMod, SnapshotNewMin}
-    val schema = spark.read.parquet(s"$sfDir/documents.parquet").schema
-    val stream = spark.readStream.schema(schema)
-      .option("pathGlobFilter", "documents.parquet").parquet(sfDir)
-      .filter(pmod($"doc_id", lit(SnapshotMod)) >= SnapshotNewMin)
-    val prior = graft.sources.Tables.documents(spark, sfDir)
-      .filter(pmod($"doc_id", lit(SnapshotMod)) < SnapshotNewMin)
+    val (prior, stream) = priorAndFreshStream(spark, sfDir)
     runQualityModelStream(stream, prior)
   }
 
@@ -1551,14 +1469,7 @@ object Streaming {
     * single-doc families. A TTL tier would evict cold grams exactly as
     * the near-dup states do — the documented bounded-state trade. */
   def streamSubstringIncremental(spark: SparkSession, sfDir: String): DataFrame = {
-    import spark.implicits._
-    import graft.operators.Dedup.{SnapshotMod, SnapshotNewMin}
-    val prior = graft.sources.Tables.documents(spark, sfDir)
-      .filter(pmod($"doc_id", lit(SnapshotMod)) < SnapshotNewMin)
-    val schema = spark.read.parquet(s"$sfDir/documents.parquet").schema
-    val delta = spark.readStream.schema(schema)
-      .option("pathGlobFilter", "documents.parquet").parquet(sfDir)
-      .filter(pmod($"doc_id", lit(SnapshotMod)) >= SnapshotNewMin)
+    val (prior, delta) = priorAndFreshStream(spark, sfDir)
     runSubstringIncrementalStream(delta, prior)
   }
 
@@ -1607,17 +1518,8 @@ object Streaming {
     * oracle); the eviction behavior itself is pinned by StreamingSpec's
     * four-batch feed. */
   def streamSubstringIncrementalTtl(spark: SparkSession, sfDir: String): DataFrame = {
-    import spark.implicits._
-    import graft.operators.Dedup.{SnapshotMod, SnapshotNewMin}
-    val prior = graft.sources.Tables.documents(spark, sfDir)
-      .filter(pmod($"doc_id", lit(SnapshotMod)) < SnapshotNewMin)
-    val schema = spark.read.parquet(s"$sfDir/documents.parquet").schema
-    val delta = spark.readStream.schema(schema)
-      .option("pathGlobFilter", "documents.parquet").parquet(sfDir)
-      .filter(pmod($"doc_id", lit(SnapshotMod)) >= SnapshotNewMin)
-      .withColumn("ts",
-        timestamp_seconds(lit(1700000000L) + pmod($"doc_id", lit(3600))))
-    runSubstringIncrementalStreamTTL(delta, prior, "1 hour")
+    val (prior, delta) = priorAndFreshStream(spark, sfDir)
+    runSubstringIncrementalStreamTTL(withInWindowTs(delta), prior, "1 hour")
   }
 
   /** [[runSubstringIncrementalStream]] with the EventTimeTimeout TTL
@@ -1702,14 +1604,7 @@ object Streaming {
     * happens after the fold, as in the batch query. Oracle shared with
     * `cur_novelty`. */
   def streamNovelty(spark: SparkSession, sfDir: String): DataFrame = {
-    import spark.implicits._
-    import graft.operators.Dedup.{SnapshotMod, SnapshotNewMin}
-    val schema = spark.read.parquet(s"$sfDir/documents.parquet").schema
-    val stream = spark.readStream.schema(schema)
-      .option("pathGlobFilter", "documents.parquet").parquet(sfDir)
-      .filter(pmod($"doc_id", lit(SnapshotMod)) >= SnapshotNewMin)
-    val prior = graft.sources.Tables.documents(spark, sfDir)
-      .filter(pmod($"doc_id", lit(SnapshotMod)) < SnapshotNewMin)
+    val (prior, stream) = priorAndFreshStream(spark, sfDir)
     runNoveltyStream(stream, prior)
   }
 
@@ -1739,10 +1634,7 @@ object Streaming {
     * final hash table, exactly as a daily dedup job reads the
     * accumulated signature store. Oracle shared with the batch query. */
   def streamDedupAhash(spark: SparkSession, sfDir: String): DataFrame = {
-    import spark.implicits._
-    val schema = spark.read.parquet(s"$sfDir/documents.parquet").schema
-    val stream = spark.readStream.schema(schema)
-      .option("pathGlobFilter", "documents.parquet").parquet(sfDir)
+    val stream = Tables.stream(spark, sfDir, "documents")
     runDedupAhashStream(stream)
   }
 
@@ -1775,9 +1667,7 @@ object Streaming {
     * [[runDedupStream]] shape at line granularity. */
   def streamDedupLines(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    val schema = spark.read.parquet(s"$sfDir/documents.parquet").schema
-    val docs = spark.readStream.schema(schema)
-      .option("pathGlobFilter", "documents.parquet").parquet(sfDir)
+    val docs = Tables.stream(spark, sfDir, "documents")
     runDedupLinesStream(docs).orderBy($"h")
   }
 
@@ -1823,10 +1713,7 @@ object Streaming {
     * mode; fold = max-struct by doc_id, deduping source replays).
     * Oracle: the batch `cur_line_filter` SQL verbatim. */
   def streamLineFilter(spark: SparkSession, sfDir: String): DataFrame = {
-    import spark.implicits._
-    val schema = spark.read.parquet(s"$sfDir/documents.parquet").schema
-    val docs = spark.readStream.schema(schema)
-      .option("pathGlobFilter", "documents.parquet").parquet(sfDir)
+    val docs = Tables.stream(spark, sfDir, "documents")
     runLineFilterStream(docs)
   }
 
@@ -1853,10 +1740,7 @@ object Streaming {
     * arrival (append mode; fold = max-struct by doc_id). Oracle: the
     * batch `text_gopher_rules` SQL verbatim. */
   def streamGopherRules(spark: SparkSession, sfDir: String): DataFrame = {
-    import spark.implicits._
-    val schema = spark.read.parquet(s"$sfDir/documents.parquet").schema
-    val stream = spark.readStream.schema(schema)
-      .option("pathGlobFilter", "documents.parquet").parquet(sfDir)
+    val stream = Tables.stream(spark, sfDir, "documents")
     runGopherRulesStream(stream)
   }
 
@@ -1887,10 +1771,7 @@ object Streaming {
     * arrival (append mode; fold = max-struct by doc_id, deduping
     * source replays). Oracle: the batch `cur_badwords` SQL verbatim. */
   def streamBadwords(spark: SparkSession, sfDir: String): DataFrame = {
-    import spark.implicits._
-    val schema = spark.read.parquet(s"$sfDir/documents.parquet").schema
-    val stream = spark.readStream.schema(schema)
-      .option("pathGlobFilter", "documents.parquet").parquet(sfDir)
+    val stream = Tables.stream(spark, sfDir, "documents")
     runBadwordsStream(stream)
   }
 
@@ -1914,10 +1795,7 @@ object Streaming {
     * verdicts final on arrival. Oracle: the batch `cur_badwords_big`
     * SQL verbatim. */
   def streamBadwordsBig(spark: SparkSession, sfDir: String): DataFrame = {
-    import spark.implicits._
-    val schema = spark.read.parquet(s"$sfDir/documents.parquet").schema
-    val stream = spark.readStream.schema(schema)
-      .option("pathGlobFilter", "documents.parquet").parquet(sfDir)
+    val stream = Tables.stream(spark, sfDir, "documents")
     runBadwordsBigStream(stream)
   }
 
@@ -1968,11 +1846,8 @@ object Streaming {
     * replays. Batch re-fit stays authoritative for vocab updates,
     * exactly the near-dup lambda argument. */
   def streamBpeEncode(spark: SparkSession, sfDir: String): DataFrame = {
-    import spark.implicits._
-    val schema = spark.read.parquet(s"$sfDir/documents.parquet").schema
-    val stream = spark.readStream.schema(schema)
-      .option("pathGlobFilter", "documents.parquet").parquet(sfDir)
-    runBpeEncodeStream(stream, graft.sources.Tables.documents(spark, sfDir))
+    val stream = Tables.stream(spark, sfDir, "documents")
+    runBpeEncodeStream(stream, Tables.documents(spark, sfDir))
   }
 
   /** The per-token piece stream of the WORD-mode streaming encode —
@@ -2066,11 +1941,8 @@ object Streaming {
     * count grows with docs seen. Single-batch vocab-covered feed ≡
     * the batch byte encode; oracle shared VERBATIM. */
   def streamBpeEncodeBytes(spark: SparkSession, sfDir: String): DataFrame = {
-    import spark.implicits._
-    val schema = spark.read.parquet(s"$sfDir/documents.parquet").schema
-    val stream = spark.readStream.schema(schema)
-      .option("pathGlobFilter", "documents.parquet").parquet(sfDir)
-    runBpeEncodeBytesStream(stream, graft.sources.Tables.documents(spark, sfDir))
+    val stream = Tables.stream(spark, sfDir, "documents")
+    runBpeEncodeBytesStream(stream, Tables.documents(spark, sfDir))
   }
 
   /** The transform of [[streamBpeEncodeBytes]] on any streaming docs
@@ -2223,13 +2095,8 @@ object Streaming {
     * the result equals the batch `text_bpe_encode` verbatim — same
     * oracle; multi-batch eviction is StreamingSpec's to pin. */
   def streamBpeEncodeTTL(spark: SparkSession, sfDir: String): DataFrame = {
-    import spark.implicits._
-    val schema = spark.read.parquet(s"$sfDir/documents.parquet").schema
-    val stream = spark.readStream.schema(schema)
-      .option("pathGlobFilter", "documents.parquet").parquet(sfDir)
-      .withColumn("ts",
-        timestamp_seconds(lit(1700000000L) + pmod($"doc_id", lit(3600))))
-    runBpeEncodeStreamTTL(stream, graft.sources.Tables.documents(spark, sfDir),
+    val stream = withInWindowTs(Tables.stream(spark, sfDir, "documents"))
+    runBpeEncodeStreamTTL(stream, Tables.documents(spark, sfDir),
       "1 hour")
   }
 
@@ -2249,14 +2116,9 @@ object Streaming {
     * same synthesized in-window arrival time, same shared batch
     * oracle, byte-mode pieces. */
   def streamBpeEncodeBytesTTL(spark: SparkSession, sfDir: String): DataFrame = {
-    import spark.implicits._
-    val schema = spark.read.parquet(s"$sfDir/documents.parquet").schema
-    val stream = spark.readStream.schema(schema)
-      .option("pathGlobFilter", "documents.parquet").parquet(sfDir)
-      .withColumn("ts",
-        timestamp_seconds(lit(1700000000L) + pmod($"doc_id", lit(3600))))
+    val stream = withInWindowTs(Tables.stream(spark, sfDir, "documents"))
     runBpeEncodeBytesStreamTTL(stream,
-      graft.sources.Tables.documents(spark, sfDir), "1 hour")
+      Tables.documents(spark, sfDir), "1 hour")
   }
 
   /** The transform of [[streamBpeEncodeBytesTTL]] on any streaming
@@ -2287,12 +2149,10 @@ object Streaming {
   def streamDecontamSemantic(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
     import graft.operators.Curation
-    val schema = spark.read.parquet(s"$sfDir/embeddings.parquet").schema
-    val train = spark.readStream.schema(schema)
-      .option("pathGlobFilter", "embeddings.parquet").parquet(sfDir)
-      .filter(pmod($"vec_id", lit(Curation.EvalSliceMod)) =!= Curation.EvalSliceRem)
-    val eval = graft.sources.Tables.embeddings(spark, sfDir)
-      .filter(pmod($"vec_id", lit(Curation.EvalSliceMod)) === Curation.EvalSliceRem)
+    val train = Tables.stream(spark, sfDir, "embeddings")
+      .filter(Curation.isTrain($"vec_id"))
+    val eval = Tables.embeddings(spark, sfDir)
+      .filter(Curation.isEval($"vec_id"))
     runDecontamSemanticStream(train, eval)
   }
 
@@ -2331,11 +2191,8 @@ object Streaming {
     * chain restricted to the delta slice, flattened per subspace. */
   def streamAnnEncode(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    import graft.operators.Dedup.{SnapshotMod, SnapshotNewMin}
-    val schema = spark.read.parquet(s"$sfDir/embeddings.parquet").schema
-    val stream = spark.readStream.schema(schema)
-      .option("pathGlobFilter", "embeddings.parquet").parquet(sfDir)
-      .filter(pmod($"vec_id", lit(SnapshotMod)) >= SnapshotNewMin)
+    val stream = Tables.stream(spark, sfDir, "embeddings")
+      .filter(isFresh($"vec_id"))
       .select($"vec_id", graft.functions.VectorOps.toDouble($"embedding").as("v"))
     runAnnEncodeStream(stream, spark, sfDir)
   }
@@ -2368,10 +2225,7 @@ object Streaming {
     * the 4 KB state answers "which keys are hot enough to salt" at
     * ingest without any per-key shuffle. */
   def streamHeavyHittersCms(spark: SparkSession, sfDir: String): DataFrame = {
-    import spark.implicits._
-    val schema = spark.read.parquet(s"$sfDir/documents.parquet").schema
-    def docs = spark.readStream.schema(schema)
-      .option("pathGlobFilter", "documents.parquet").parquet(sfDir)
+    def docs = Tables.stream(spark, sfDir, "documents")
     runHeavyHittersCmsStream(docs, docs)
   }
 
@@ -2407,16 +2261,12 @@ object Streaming {
     * shared with `cur_dsir_weights`. */
   def streamDsirWeights(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    import graft.operators.Dedup.{SnapshotMod, SnapshotNewMin}
-    val schema = spark.read.parquet(s"$sfDir/documents.parquet").schema
-    val stream = spark.readStream.schema(schema)
-      .option("pathGlobFilter", "documents.parquet").parquet(sfDir)
-      .filter(pmod($"doc_id", lit(SnapshotMod)) >= SnapshotNewMin)
-    val static = graft.sources.Tables.documents(spark, sfDir)
+    val stream = Tables.stream(spark, sfDir, "documents")
+      .filter(isFresh($"doc_id"))
+    val static = Tables.documents(spark, sfDir)
     runDsirStream(stream,
-      static.filter(pmod($"doc_id", lit(SnapshotMod)) < SnapshotNewMin &&
-        $"lang" === "en"),
-      static.filter(pmod($"doc_id", lit(SnapshotMod)) >= SnapshotNewMin))
+      static.filter(isPrior($"doc_id") && $"lang" === "en"),
+      static.filter(isFresh($"doc_id")))
   }
 
   /** The transform of [[streamDsirWeights]] on any streaming docs frame
@@ -2663,8 +2513,8 @@ object Streaming {
         |common AS (
         |  SELECT a.doc_id ai, b.doc_id bi, count(*) c
         |  FROM sh a JOIN sh b ON a.s = b.s AND a.doc_id < b.doc_id
-        |  WHERE a.doc_id % ${graft.operators.Dedup.SnapshotMod} >= ${graft.operators.Dedup.SnapshotNewMin}
-        |     OR b.doc_id % ${graft.operators.Dedup.SnapshotMod} >= ${graft.operators.Dedup.SnapshotNewMin}
+        |  WHERE ${freshSql("a.doc_id")}
+        |     OR ${freshSql("b.doc_id")}
         |  GROUP BY a.doc_id, b.doc_id
         |)
         |SELECT ai AS doc_a, bi AS doc_b,

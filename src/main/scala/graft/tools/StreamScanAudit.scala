@@ -68,8 +68,7 @@ object StreamScanAudit {
     // synthetic in-window ts the TTL forms expect
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
     val split = java.nio.file.Files.createTempDirectory("graft_ssa_").toString
-    val src = graft.sources.Tables.documents(spark, sfDir)
-      .withColumn("ts", timestamp_seconds(lit(1700000000L) + pmod($"doc_id", lit(3600))))
+    val src = Streaming.withInWindowTs(graft.sources.Tables.documents(spark, sfDir))
     (0 until 3).foreach { k =>
       val part = src.filter(pmod($"doc_id", lit(3)) === k).coalesce(1)
       val tmp = s"$split/stage$k"
@@ -87,10 +86,10 @@ object StreamScanAudit {
     }
 
     import graft.operators.{Curation, Dedup}
-    val freshPred = pmod($"doc_id", lit(Dedup.SnapshotMod)) >= Dedup.SnapshotNewMin
+    val freshPred = Dedup.isFresh($"doc_id")
     def prior = spark.read.parquet(split).filter(!freshPred)
     def evalSlice = spark.read.parquet(split)
-      .filter(pmod($"doc_id", lit(Curation.EvalSliceMod)) === Curation.EvalSliceRem)
+      .filter(Curation.isEval($"doc_id"))
     def snapshot = spark.read.parquet(split)
 
     val audits: Seq[(String, Boolean => DataFrame)] = Seq(

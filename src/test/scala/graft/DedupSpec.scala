@@ -13,6 +13,30 @@ class DedupSpec extends AnyFunSuite {
     df.select("doc_a", "doc_b").collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
 
+  test("split helpers: the Column and the oracle SQL form select the same ids") {
+    import spark.implicits._
+    import org.apache.spark.sql.Column
+    import org.apache.spark.sql.functions.expr
+    import graft.operators.Curation
+    val all = (0L until 100L).toSet
+    val ids = (all.toSeq.sorted.map(Option(_)) :+ None).toDF("id")
+    def sel(c: Column): Set[Option[Long]] = ids.filter(c).as[Option[Long]].collect().toSet
+    val cases: Seq[(String, Column, String, Long => Boolean)] = Seq(
+      ("prior", Dedup.isPrior($"id"), Dedup.priorSql("id"), _ % 10 < 8),
+      ("fresh", Dedup.isFresh($"id"), Dedup.freshSql("id"), _ % 10 >= 8),
+      ("train", Curation.isTrain($"id"), Curation.trainSql("id"), _ % 10 != 7),
+      ("eval", Curation.isEval($"id"), Curation.evalSql("id"), _ % 10 == 7))
+    for ((label, column, sql, expected) <- cases) {
+      assert(sel(column) === sel(expr(sql)), s"$label: Column vs `$sql`")
+      assert(sel(column) === all.filter(expected).map(Option(_)), label)
+    }
+    // each split partitions the non-null ids; null falls in neither side
+    for ((a, b) <- Seq((cases(0), cases(1)), (cases(2), cases(3)))) {
+      val (x, y) = (sel(a._2), sel(b._2))
+      assert(x.intersect(y).isEmpty && (x ++ y) === all.map(Option(_)), s"${a._1}/${b._1}")
+    }
+  }
+
   test("fused shingle hashes ≡ the string-shingle composition, both families") {
     import spark.implicits._
     import org.apache.spark.sql.functions._

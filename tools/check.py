@@ -3,11 +3,19 @@
 shipped engine is the Scala code under src/).
 
 Usage: python3 tools/check.py <sfDir> <outDir> [query ...]
+       python3 tools/check.py --same-as <parentOutDir> <outDir> [query ...]
 
 Reads outDir/<name>/ parquet written by graft.Verify, runs the matching
 oracle SQL from outDir/oracle_sql.json in DuckDB over the sfDir tables,
 and compares row count, column names, and (column-name-sorted, row-sorted)
-values."""
+values.
+
+--same-as compares each of outDir's dumped results with the same key's
+dump in parentOutDir (another graft.Verify run, e.g. of the parent
+commit) after the same canonicalization, exactly: dtypes and values. It
+lists every key that differs or is missing on either side, notes the
+keys whose oracle SQL text changed, and exits 1 if any key differs or is
+missing — the result-identity check for a refactor."""
 import json, sys, glob, os
 import duckdb
 import pyarrow.parquet as pq
@@ -42,7 +50,40 @@ def canon(df):
     out = out.sort_values(by=list(out.columns), kind="mergesort").reset_index(drop=True)
     return out
 
+def result_names(out_dir):
+    return {d for d in os.listdir(out_dir) if os.path.isdir(os.path.join(out_dir, d))}
+
+def same_as(parent_dir, out_dir, only):
+    names = result_names(parent_dir) | result_names(out_dir)
+    if only:
+        names &= only
+    bad = []
+    for name in sorted(names):
+        a = b = None
+        if os.path.isdir(os.path.join(parent_dir, name)):
+            a = load_result(os.path.join(parent_dir, name))
+        if os.path.isdir(os.path.join(out_dir, name)):
+            b = load_result(os.path.join(out_dir, name))
+        if a is None or b is None:
+            side = "parent" if a is None else "change"
+            print(f"MISSING {name}: no result parquet in the {side} dump")
+            bad.append(name); continue
+        try:
+            pd.testing.assert_frame_equal(canon(a), canon(b), check_dtype=True,
+                                          check_exact=True)
+        except AssertionError as ex:
+            print(f"DIFFER {name}\n{str(ex)[:500]}")
+            bad.append(name)
+    sql = [json.load(open(f"{d}/oracle_sql.json")) for d in (parent_dir, out_dir)]
+    for name in sorted(set(sql[0]) | set(sql[1])):
+        if (not only or name in only) and sql[0].get(name) != sql[1].get(name):
+            print(f"SQL-CHANGED {name}")
+    print(f"\n{len(names) - len(bad)} same, {len(bad)} differing or missing")
+    sys.exit(1 if bad else 0)
+
 def main():
+    if sys.argv[1] == "--same-as":
+        same_as(sys.argv[2], sys.argv[3], set(sys.argv[4:]))
     sf_dir, out_dir = sys.argv[1], sys.argv[2]
     only = set(sys.argv[3:])
     con = duckdb.connect()
